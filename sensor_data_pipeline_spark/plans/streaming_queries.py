@@ -800,38 +800,21 @@ ORDER BY user_id, ts
 """,
 )
 def q260_stream_tws_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 prev-value memory on Spark 4's transformWithStateInPandas
-    (StatefulProcessor + ValueState — streaming/stateful_v2.py), the
-    successor API to applyInPandasWithState: per-key delta from the
-    immediately preceding row, across micro-batch boundaries.
-
-    Engine selection is E3 init-failure degradation (the reference
-    pattern at src/event_loops.c:26-31: a module whose init fails
-    must degrade, not crash): transformWithStateInPandas talks to the
-    state store over a protobuf wire protocol, so when
-    google.protobuf is importable (standard on cluster images) the
-    query runs the TWS engine; in this pip-less container it falls
-    back to streaming/stateful.delta_stream_v1 — the
-    applyInPandasWithState twin with IDENTICAL chunk handling, sort,
-    and arithmetic — so the oracle pins the same semantics for
-    whichever engine ran. Both engines: state is one double per key,
-    one shuffle on the key, O(batch) per micro-batch.
+    """A1 prev-value memory: per-key delta from the immediately
+    preceding row, across micro-batch boundaries, on
+    applyInPandasWithState (streaming/stateful.delta_stream_v1). State
+    is one double per key, one shuffle on the key, O(batch) per
+    micro-batch.
     """
-    try:
-        import google.protobuf  # noqa: F401
+    from sensor_data_pipeline_spark.streaming.stateful import delta_stream_v1
 
-        from sensor_data_pipeline_spark.streaming.stateful_v2 import delta_stream
-    except ImportError:  # this container: no protobuf -> Spark-3-API twin
-        from sensor_data_pipeline_spark.streaming.stateful import (
-            delta_stream_v1 as delta_stream,
-        )
     stream = _events_stream(spark, sf_dir).filter(F.col("user_id") < 16)
     readings = stream.select(
         F.col("user_id").cast("string").alias("k"),
         F.col("ts").alias("tick_ts"),
         F.col("value"),
     )
-    out = _drain(delta_stream(readings), "q260_mem")
+    out = _drain(delta_stream_v1(readings), "q260_mem")
     return out.select("k", "tick_ts", "value", "delta").orderBy("k", "tick_ts")
 
 

@@ -282,7 +282,7 @@ def _token_bucket_group(
     # may split a key's micro-batch rows across several chunks with no
     # cross-chunk ordering guarantee, so per-chunk sorting would
     # interleave wrongly whenever a later chunk holds earlier rows
-    # (same lesson as stateful_v2.PrevValueDeltaProcessor).
+    # (same lesson as _delta_group below).
     chunks = [pdf for pdf in pdfs if len(pdf)]
     rows = (
         pd.concat(chunks, ignore_index=True).sort_values(["tick_ts", "event_id"])
@@ -322,9 +322,7 @@ def token_bucket_stream(readings: DataFrame, timeout: str = "NoTimeout") -> Data
 
 
 # ---------------------------------------------------------------------------
-# prev-value delta (A1) — the applyInPandasWithState twin of
-# stateful_v2.PrevValueDeltaProcessor, used as the E3 fallback engine
-# when transformWithStateInPandas' protobuf wire dependency is absent
+# prev-value delta (A1) — q260's engine
 # ---------------------------------------------------------------------------
 
 DELTA_OUTPUT = StructType(
@@ -344,10 +342,9 @@ def _delta_group(
 ) -> Iterator[pd.DataFrame]:
     """Per-key previous-value memory: each row's delta from the
     immediately preceding row of the same key (null for the key's
-    first row ever), across micro-batch boundaries. Identical
-    semantics (including chunk handling and sort) to
-    stateful_v2.PrevValueDeltaProcessor — the two arbitrary-stateful
-    API generations must be interchangeable engines for A1."""
+    first row ever), across micro-batch boundaries. A key's rows can
+    arrive as several Arrow chunks in arbitrary order, so they are
+    concatenated and sorted once before the diff."""
     prev = state.get[0] if state.exists else None
     chunks = [pdf for pdf in pdfs if len(pdf)]
     if not chunks:

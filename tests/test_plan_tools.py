@@ -12,6 +12,7 @@ no Spark session, so the gate semantics themselves are guarded cheaply:
 
 from __future__ import annotations
 
+from bench import default_driver_mem
 from tools.plan_audit import RESCAN_MAX, findings_from_digest, unexplained_findings
 from tools.plan_summary import regressions
 
@@ -140,6 +141,16 @@ def test_regression_gate_flags_pin_rowwise_growth():
     grown = {"q": _digest(pin_python=1, pin_python_rowwise=1)}
     regr = regressions(grown, baseline)
     assert "q" in regr and any("pin_python_rowwise" in r for r in regr["q"])
+
+
+def test_driver_mem_default_capped_at_half_of_ram():
+    # a swap-less 15 GiB host must not get a heap that can outgrow RAM;
+    # a large host keeps the suite-sized 24g
+    gib = 2**30
+    assert int(default_driver_mem(15 * gib)[:-1]) * gib <= 15 * gib // 2
+    assert default_driver_mem(64 * gib) == "24g"
+    assert default_driver_mem(48 * gib) == "24g"
+    assert default_driver_mem(1 * gib) == "1g"
 
 
 def test_live_mutant_rescan_hidden_inside_pin_fails_gate(spark):

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from sensor_data_pipeline_spark.plans import REGISTRY
 
 TABLES = {

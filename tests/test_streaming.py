@@ -347,80 +347,6 @@ def test_cdc_apply_stream_versioned_exactly_once(spark, tmp_path):
     assert snap == {1: 70, 2: 51, 3: 7, 4: 4}
 
 
-def test_transform_with_state_delta_across_batches(spark, tmp_path):
-    """Spark 4 StatefulProcessor (transformWithStateInPandas): per-key
-    prev-value deltas must match the batch lag() twin even when rows
-    arrive split across micro-batches — state carries the last value
-    over the boundary. Requires protobuf (the TWS state-server wire
-    protocol), which this container lacks — skipped there, runs on any
-    standard cluster image."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs google.protobuf (the TWS "
-        "state-server wire protocol); absent in this container — see "
-        "README 'Environment gaps'. The applyInPandasWithState twin "
-        "(test_sessionize_*) fully covers keyed-state semantics here.",
-    )
-    import os
-
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-    from pyspark.sql.window import Window
-
-    from sensor_data_pipeline_spark.streaming.stateful_v2 import delta_stream
-
-    schema = StructType(
-        [
-            StructField("k", StringType()),
-            StructField("tick_ts", TimestampType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    rows = [
-        ("a", ts("2024-01-01 00:00:00"), 10.0),
-        ("a", ts("2024-01-01 00:00:01"), 12.5),
-        ("b", ts("2024-01-01 00:00:00"), 5.0),
-        ("a", ts("2024-01-01 00:00:02"), 11.0),
-        ("b", ts("2024-01-01 00:00:03"), 4.0),
-    ]
-    path = str(tmp_path / "twsip")
-    os.makedirs(path)
-    for i, chunk in enumerate([rows[0:3], rows[3:5]]):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(f"{path}/f{i}")
-        time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{path}/f*")
-    )
-    q = (
-        delta_stream(stream)
-        .writeStream.format("memory")
-        .queryName("twsip_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    got = {
-        (r.k, r.tick_ts): r.delta
-        for r in spark.sql("SELECT * FROM twsip_out").collect()
-    }
-
-    batch = spark.createDataFrame(rows, schema)
-    w = Window.partitionBy("k").orderBy("tick_ts")
-    want = {
-        (r.k, r.tick_ts): r.delta
-        for r in batch.withColumn("delta", F.col("value") - F.lag("value").over(w)).collect()
-    }
-    assert got == want
-
-
 def test_jsonl_spool_sink_two_phase_commit_and_restart(spark, tmp_path):
     """Custom DataSourceStreamWriter sink: epochs become visible only
     via commit-time renames (no temp files survive), and a restart

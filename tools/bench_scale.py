@@ -16,9 +16,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import ROOT, release_storage, start_session, time_passes, warm_up  # noqa: E402
 
 DEFAULT_QUERIES = [
     # round-3 bench top-10 by headline cost
@@ -35,37 +36,25 @@ DEFAULT_QUERIES = [
 ]
 
 
-def _time_query(spec, spark, sf_dir: str) -> float:
-    runs = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        df = spec.spark(spark, sf_dir)
-        try:
-            df.toPandas()
-        except Exception:
-            df.collect()
-        runs.append(time.perf_counter() - t0)
-    return round(min(runs), 3)
+def _best_of_2(spark, spec, sf_dir: str) -> float:
+    # storage hygiene before EACH scale, not just between queries: a
+    # persist-heavy query's small-scale pins otherwise stay resident
+    # while the big scale runs, and the ratio's numerator pays the
+    # small scale's block-store pressure — biasing upward exactly the
+    # persist-heavy queries the sweep watches
+    release_storage(spark)
+    return min(time_passes(spark, spec, sf_dir, 2))
 
 
 def main() -> int:
     from sensor_data_pipeline_spark.plans import REGISTRY
-    from sensor_data_pipeline_spark.session import get_spark
 
     small = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    big = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "sf1"
-    )
+    big = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, ".scratch", "sf1")
     names = sys.argv[3:] or DEFAULT_QUERIES
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    spark = get_spark(app_name="bench-scale")
-    # warm the machinery once (same rationale as bench.py)
-    from pyspark.sql import functions as F
-
-    spark.read.parquet(os.path.join(small, "lineitem.parquet")).groupBy(
-        "l_returnflag"
-    ).agg(F.sum("l_quantity")).collect()
+    spark = start_session("bench-scale")
+    warm_up(spark, small)
 
     unknown = [n for n in names if n not in REGISTRY]
     if unknown:
@@ -77,44 +66,14 @@ def main() -> int:
         if name not in REGISTRY:
             continue
         spec = REGISTRY[name]
-        t_small = _time_query(spec, spark, small)
-        # hygiene BETWEEN the scales too, not just between queries: a
-        # persist-heavy query's small-scale pins otherwise stay
-        # resident while the big scale runs, and the ratio's numerator
-        # pays the small scale's block-store pressure — biasing upward
-        # exactly the persist-heavy queries the sweep watches
-        spark.catalog.clearCache()
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass
-        t_big = _time_query(spec, spark, big)
+        t_small, t_big = (_best_of_2(spark, spec, d) for d in (small, big))
         ratio = round(t_big / t_small, 2) if t_small > 0 else None
         out[name] = {lbl_small: t_small, lbl_big: t_big, "ratio": ratio}
         print(f"{name}: {t_small}s -> {t_big}s ({ratio}x)", flush=True)
-        # cache hygiene: queries that persist intermediates (MinHash
-        # signatures, census pins) leave them resident at BOTH scales;
-        # over a long batch the block store fills, the tail pays in
-        # GC-locker stalls, and late ratios read 5-10x too high (the
-        # r8 27-query batch printed q11 at 20.02x vs 2.55x fresh —
-        # then died allocating 5 words). clearCache() drops .cache()/
-        # .persist() frames but NOT localCheckpoint blocks — those are
-        # RDD-level persists outside the CacheManager, reclaimed only
-        # when the ContextCleaner GCs the RDD handles (measured: a
-        # checkpointed RDD stays at 32/32 cached partitions across
-        # clearCache). The query's Python refs die with this loop
-        # iteration; a JVM System.gc() lets the cleaner's weak refs
-        # fire now instead of under allocation pressure mid-timing.
-        spark.catalog.clearCache()
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass  # hygiene is best-effort; never fail the measurement
         _write_artifact(out, lbl_small, lbl_big)  # incremental: a late
         # query failure must not lose earlier measurements (a round-5
         # q332 OOM dropped 16 finished decade-2 rows from the artifact)
 
-    _write_artifact(out, lbl_small, lbl_big)
     print(json.dumps({k: v["ratio"] for k, v in out.items()}))
     return 0
 
@@ -122,15 +81,11 @@ def main() -> int:
 def _write_artifact(out: dict, lbl_small: str, lbl_big: str) -> None:
     # merge with any prior snapshot so coverage grows incrementally —
     # re-run queries get fresh numbers, unlisted ones keep theirs
-    import json as _json
-    import os as _os
-
-    here = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    artifact = _os.path.join(here, _os.environ.get("SCALE_ARTIFACT", "BENCH_SF1.json"))
+    artifact = os.path.join(ROOT, os.environ.get("SCALE_ARTIFACT", "BENCH_SF1.json"))
     merged: dict[str, dict] = {}
-    if _os.path.exists(artifact):
+    if os.path.exists(artifact):
         with open(artifact) as f:
-            merged = _json.load(f).get("queries", {})
+            merged = json.load(f).get("queries", {})
     merged.update(out)
     doc = {
         "metric": os.environ.get("SCALE_METRIC", "scaleup_stress_10x"),
@@ -146,7 +101,7 @@ def _write_artifact(out: dict, lbl_small: str, lbl_big: str) -> None:
         "max_ratio": max(v["ratio"] for v in merged.values() if v["ratio"]),
     }
     with open(artifact, "w") as f:
-        _json.dump(doc, f, indent=1, sort_keys=True)
+        json.dump(doc, f, indent=1, sort_keys=True)
 
 
 if __name__ == "__main__":

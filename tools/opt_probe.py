@@ -1,14 +1,15 @@
 """Optimization-round probe: per-query solo measurement + plan capture.
 
-For each named query, replicates bench.py's environment exactly (same
-warmup — page-cache read-through, no base-table .cache() since the r12
-methodology ruling — same toPandas materialization) and then:
+For each named query, sets up bench.py's environment through its
+measurement core (``start_session`` + ``warm_up``: page-cache
+read-through, no base-table .cache() since the r12 methodology ruling)
+and then:
 
 1. captures ``df.explain("formatted")`` to a file (for plans/r11/
    before/after evidence),
-2. times a cold pass + N warm passes with bench's methodology
-   (fresh ``spec.spark(...)`` build per pass, so plan-construction
-   cost is included — the number the driver's bench reports),
+2. times a cold pass + N warm passes with ``bench.time_passes`` (fresh
+   ``spec.spark(...)`` build per pass, so plan-construction cost is
+   included — the number bench.py reports),
 3. optionally times a noop-sink pass (guide §1.4: computation without
    the collect/Arrow-transfer cost) so collect-dominated queries are
    distinguishable from compute-dominated ones.
@@ -34,7 +35,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from bench import release_storage, start_session, time_passes, warm_up  # noqa: E402
 
 
 def main() -> int:
@@ -47,39 +48,10 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    from pyspark.sql import functions as F
-
     from sensor_data_pipeline_spark.plans import REGISTRY
-    from sensor_data_pipeline_spark.session import get_spark
-    from sensor_data_pipeline_spark.sources.tables import load_table
 
-    spark = get_spark(app_name="opt-probe")
-
-    # bench.py's warmup, verbatim in spirit: codegen compiler, shuffle
-    # machinery, Arrow/UDF worker pool, then the base-table page-cache
-    # warmup (read-through noop, NO .cache() — the r12 methodology
-    # ruling: timed queries compute from the parquet inputs)
-    warm = spark.read.parquet(os.path.join(args.sf, "lineitem.parquet"))
-    warm.groupBy("l_returnflag").agg(F.sum("l_quantity")).collect()
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _warm_udf(x):
-        return x * 1.0
-
-    spark.range(1000).select(_warm_udf(F.col("id").cast("double"))).collect()
-    for t in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
-        load_table(spark, t, args.sf).write.format("noop").mode("overwrite").save()
-
-    def materialize(df) -> int:
-        try:
-            return len(df.toPandas())
-        except Exception:
-            return len(df.collect())
+    spark = start_session("opt-probe")
+    warm_up(spark, args.sf)
 
     for name in args.queries:
         spec = REGISTRY[name]
@@ -95,30 +67,16 @@ def main() -> int:
             plan_file = os.path.join(args.plans, f"{name}{sfx}.txt")
             with open(plan_file, "w") as f:
                 f.write(buf.getvalue())
-        t0 = time.perf_counter()
-        materialize(spec.spark(spark, args.sf))
-        cold = round(time.perf_counter() - t0, 3)
-        warms = []
-        for _ in range(args.runs):
-            t1 = time.perf_counter()
-            materialize(spec.spark(spark, args.sf))
-            warms.append(round(time.perf_counter() - t1, 3))
+        cold, *warms = time_passes(spark, spec, args.sf, 1 + args.runs)
         noop_s = None
         if args.noop:
             dfn = spec.spark(spark, args.sf)
             t2 = time.perf_counter()
             dfn.write.format("noop").mode("overwrite").save()
             noop_s = round(time.perf_counter() - t2, 3)
-        # per-query storage hygiene (ADVICE r11): drop caches the query
-        # created and GC the eager/lazy checkpoint blocks so a
-        # late-listed query is measured under the same storage headroom
-        # as an early one (clearCache does not free checkpoint blocks;
-        # the GC's ContextCleaner weak refs do)
-        spark.catalog.clearCache()
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass
+        # per query, so a late-listed query is measured under the same
+        # storage headroom as an early one (ADVICE r11)
+        release_storage(spark)
         print(
             json.dumps(
                 {

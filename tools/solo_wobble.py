@@ -8,7 +8,8 @@ round's BENCH_r{N} shows a query slower than the previous round, this
 protocol decides "host weather vs real regression" (the caea762
 precedent):
 
-1. fresh session, bench.py's exact warmup + base-table read-through,
+1. fresh session, then bench.py's ``warm_up`` (codegen, workers and the
+   base-table read-through),
 2. one cold pass (per-query codegen), then 3 warm passes -> best-of-3,
 3. plan-digest diff against the committed PLAN_SUMMARY.json baseline
    (shape is scale-invariant; built at sf0.001 like the baseline).
@@ -31,23 +32,20 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from bench import ROOT, infer_sf, start_session, time_passes, warm_up  # noqa: E402
 
 
 def main() -> int:
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
 
     from sensor_data_pipeline_spark.plans import REGISTRY
-    from sensor_data_pipeline_spark.session import get_spark
 
     spec = REGISTRY[name]
-    spark = get_spark(app_name=f"solo-{name}")
+    spark = start_session(f"solo-{name}")
 
     # Digest FIRST, in the pristine session: the committed
     # PLAN_SUMMARY.json baseline is built with no tables cached, and
@@ -71,39 +69,9 @@ def main() -> int:
     diff = {k: (base.get(k), digest.get(k)) for k in set(base) | set(digest)
             if base.get(k) != digest.get(k)}
 
-    # bench.py's warmup, verbatim: codegen compiler, shuffle machinery,
-    # Arrow/Python worker pool, then the ten base tables read through once.
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    warm = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    warm.groupBy("l_returnflag").agg(F.sum("l_quantity")).collect()
-
-    @pandas_udf("double")
-    def _warm_udf(x):
-        return x * 1.0
-
-    spark.range(1000).select(_warm_udf(F.col("id").cast("double"))).collect()
-
-    from sensor_data_pipeline_spark.sources.tables import load_table
-
-    # page-cache read-through only, NO .cache() — the r12 bench
-    # methodology ruling (timed queries compute from parquet inputs)
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        load_table(spark, t, sf_dir).write.format("noop").mode("overwrite").save()
-
-    def materialize(df) -> int:
-        try:
-            return len(df.toPandas())
-        except Exception:
-            return len(df.collect())
-
-    runs = []
-    for _ in range(4):  # pass 0 = cold (codegen); 1-3 = warm best-of-3
-        t0 = time.perf_counter()
-        materialize(spec.spark(spark, sf_dir))
-        runs.append(round(time.perf_counter() - t0, 3))
+    # bench.py's warm-up, after the digest (see above)
+    warm_up(spark, sf_dir)
+    runs = time_passes(spark, spec, sf_dir, 4)  # pass 0 = cold (codegen); 1-3 = warm best-of-3
 
     result = {
         "query": name, "sf_dir": sf_dir, "cold": runs[0],
@@ -127,8 +95,6 @@ def main() -> int:
     # Ledger only for runs at the battery's own scale factor — compare
     # the RECORDED sf (bench.infer_sf on both paths), not a string
     # suffix, so symlinked/copied fixture dirs still bind (ADVICE r10).
-    from bench import infer_sf
-
     sf_match = battery and infer_sf(os.path.realpath(sf_dir)) == battery.get("sf")
     if battery and not sf_match:
         print(

@@ -7,10 +7,11 @@ breakdown (offset/commit-log persistence vs state-store work vs
 planning vs actual processing) with a StreamingQueryListener and
 decide what is config-addressable.
 
-Runs the named streaming queries once each in a fresh session with a
-listener attached, then prints per-batch ``durationMs`` maps (Spark's
-own breakdown: triggerExecution, queryPlanning, getBatch, latestOffset,
-walCommit, commitOffsets, addBatch) and state-operator commit times.
+Runs the named streaming queries once each, after bench.py's
+``warm_up``, with a listener attached, then prints per-batch
+``durationMs`` maps (Spark's own breakdown: triggerExecution,
+queryPlanning, getBatch, latestOffset, walCommit, commitOffsets,
+addBatch) and state-operator commit times.
 
 Usage: python tools/stream_probe.py [--sf SF_DIR] q170 [q162 ...]
 """
@@ -25,6 +26,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import materialize, start_session, warm_up  # noqa: E402
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -32,13 +35,12 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     from pyspark.sql.streaming import StreamingQueryListener
 
     from sensor_data_pipeline_spark.plans import REGISTRY
-    from sensor_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(app_name="stream-probe")
+    spark = start_session("stream-probe")
+    warm_up(spark, args.sf)
 
     batches: list[dict] = []
 
@@ -80,7 +82,7 @@ def main() -> int:
         spec = REGISTRY[name]
         batches.clear()
         t0 = time.perf_counter()
-        n = len(spec.spark(spark, args.sf).collect())
+        n = materialize(spec.spark(spark, args.sf))
         wall = round(time.perf_counter() - t0, 3)
         # listener events are delivered async; give the bus a moment
         time.sleep(1.0)
