@@ -43,15 +43,10 @@ def default_driver_mem(phys_bytes: int) -> str:
 
 def start_session(app_name: str):
     """The measurement SparkSession. ``SPARK_GRAFT_DRIVER_MEM``
-    overrides the heap default. The repo root goes on ``PYTHONPATH``
-    before the JVM starts: the package is not installed, and Python
-    workers (pandas UDFs, applyInPandasWithState) import it from
-    whatever working directory the tool was launched in."""
+    overrides the heap default; ``get_spark`` puts the package on the
+    Python workers' path."""
     phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", default_driver_mem(phys))
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
-    )
     from sensor_data_pipeline_spark.session import get_spark
 
     return get_spark(app_name=app_name)

@@ -12,6 +12,14 @@ every knob matters at cluster scale:
   AQE coalesces from a high initial number, so we set the initial
   partition count instead of disabling it.
 - Arrow on: every pandas_udf / applyInPandas transfer is Arrow-batched.
+- Python workers fork from the engine's own daemon
+  (``sensor_data_pipeline_spark.pydaemon``). On CPython 3.11 every
+  Python-UDF task otherwise re-reads the zip directories of pyspark.zip,
+  py4j and the spark-core jar in ``importlib.invalidate_caches()``:
+  200-310 ms of CPU per task, about 1 core-second of a 4-task stream
+  batch. The daemon makes that re-read lazy, as CPython 3.12 does
+  (gh-103200). Local masters only: on a cluster the daemon module must
+  be importable on every executor before any task ships it.
 """
 
 from __future__ import annotations
@@ -23,6 +31,8 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+#: the package is not installed; Python workers import it from here
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @contextmanager
@@ -103,6 +113,11 @@ def get_spark(
     # either way: AQE still derives the partition COUNT from input
     # size; this only moves the floor.
     aqe_floor = _resolve_aqe_floor(resolved_master)
+    # Python workers (pandas UDFs, applyInPandasWithState, the daemon
+    # module) inherit the JVM's PYTHONPATH, fixed when the JVM starts
+    worker_path = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if PACKAGE_PARENT not in worker_path:
+        os.environ["PYTHONPATH"] = os.pathsep.join(p for p in [PACKAGE_PARENT, *worker_path] if p)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(resolved_master)
@@ -135,6 +150,8 @@ def get_spark(
         builder = builder.config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize", aqe_floor
         )
+    if resolved_master.startswith("local"):
+        builder = builder.config("spark.python.daemon.module", "sensor_data_pipeline_spark.pydaemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -19,7 +19,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import ROOT, release_storage, start_session, time_passes, warm_up  # noqa: E402
+from bench import ROOT, infer_sf, release_storage, start_session, time_passes, warm_up  # noqa: E402
 
 DEFAULT_QUERIES = [
     # round-3 bench top-10 by headline cost
@@ -34,6 +34,13 @@ DEFAULT_QUERIES = [
     "q41_dedup_jaccard",
     "q186_char_trigram_profile",
 ]
+
+
+def scale_label(sf_dir: str) -> str:
+    """Column label for one scale: ``sf0.01_sec`` for a ``.../sf0.01``
+    directory, the directory name when the path names no scale."""
+    sf = infer_sf(sf_dir)
+    return f"sf{sf:g}_sec" if sf >= 0 else f"{os.path.basename(os.path.normpath(sf_dir))}_sec"
 
 
 def _best_of_2(spark, spec, sf_dir: str) -> float:
@@ -52,6 +59,11 @@ def main() -> int:
     small = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     big = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, ".scratch", "sf1")
     names = sys.argv[3:] or DEFAULT_QUERIES
+    lbl_small = os.environ.get("SCALE_SMALL_LABEL", scale_label(small))
+    lbl_big = os.environ.get("SCALE_BIG_LABEL", scale_label(big))
+    if lbl_small == lbl_big:
+        print(f"both scales label as {lbl_small!r}; set SCALE_SMALL_LABEL / SCALE_BIG_LABEL", file=sys.stderr)
+        return 2
 
     spark = start_session("bench-scale")
     warm_up(spark, small)
@@ -59,8 +71,6 @@ def main() -> int:
     unknown = [n for n in names if n not in REGISTRY]
     if unknown:
         print(f"unknown query names (skipped): {unknown}", flush=True)
-    lbl_small = os.environ.get("SCALE_SMALL_LABEL", "sf0.1_sec")
-    lbl_big = os.environ.get("SCALE_BIG_LABEL", "sf1_sec")
     out: dict[str, dict] = {}
     for name in names:
         if name not in REGISTRY:

@@ -47,17 +47,12 @@ def main() -> int:
     spec = REGISTRY[name]
     spark = start_session(f"solo-{name}")
 
-    # Digest FIRST, in the pristine session: the committed
-    # PLAN_SUMMARY.json baseline is built with no tables cached, and
-    # caching the base tables below turns their scan leaves into pins
-    # whenever sf_dir aliases the digest scale (reproduced: sf0.001
-    # runs printed a false 'regression' diff {scans->pins} for an
-    # unchanged plan). Plan shape is scale-invariant; the cost is that
-    # for PIN queries the digest executes the sf0.001 pin builds, so
-    # the "cold" pass below is partially pre-warmed (codegen for the
-    # pin stages compiles here). That is acceptable because the
-    # protocol's verdict rule reads warm_best_of_3, never cold — cold
-    # is advisory context only.
+    # The digest runs before the warm-up. The warm-up caches nothing,
+    # so the order leaves the digest's scan leaves as they are. For PIN
+    # queries the digest executes the sf0.001 pin builds and so
+    # compiles their stages' codegen, which flatters the "cold" pass
+    # below. The verdict rule reads warm_best_of_3, never cold; cold is
+    # advisory context only.
     import plan_summary as ps
 
     cap = ps._PinCapture()
