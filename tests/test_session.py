@@ -1,5 +1,6 @@
-"""Session-factory tests: config policy (no SparkSession needed) and
-the engine's Python worker daemon.
+"""Session-factory tests: config policy (no SparkSession needed), the
+engine's Python worker daemon and the checkpoint manager of local
+sessions.
 
 The AQE coalescing floor is the one config whose LOCAL-optimal value
 (64k — a local task costs ~2-5 ms, so 64 KB of post-shuffle input is
@@ -12,6 +13,7 @@ masters (VERDICT r11 item 5 / ADVICE r11).
 
 import importlib
 import os
+import re
 import subprocess
 import sys
 import textwrap
@@ -21,7 +23,9 @@ import zipimport
 import pytest
 
 from sensor_data_pipeline_spark import pydaemon
-from sensor_data_pipeline_spark.session import PACKAGE_PARENT, _resolve_aqe_floor
+from sensor_data_pipeline_spark.session import PACKAGE_PARENT, _local_master_conf, _resolve_aqe_floor
+
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
 
 
 @pytest.fixture
@@ -47,6 +51,83 @@ def test_env_override_wins_everywhere(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_AQE_MIN_PARTITION", "2m")
     assert _resolve_aqe_floor("local[32]") == "2m"
     assert _resolve_aqe_floor("yarn") == "2m"
+
+
+def test_local_only_settings_stay_off_clusters():
+    for master in ("local", "local[4]", "local[*]"):
+        assert _local_master_conf(master) == {
+            "spark.python.daemon.module": "sensor_data_pipeline_spark.pydaemon",
+            "spark.sql.streaming.checkpointFileManagerClass": f"{_CHECKPOINTING}.FileSystemBasedCheckpointFileManager",
+        }
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:443"):
+        assert _local_master_conf(master) == {}
+
+
+def _checkpoint_manager(spark, directory, kind=None):
+    """The session's checkpoint manager for ``directory`` (what every
+    offset, commit, state and sink log write goes through), or the
+    named ``kind`` built over the same Hadoop configuration."""
+    pkg = spark._jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    path = spark._jvm.org.apache.hadoop.fs.Path(str(directory))
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if kind is None:
+        return pkg.CheckpointFileManager.create(path, hadoop_conf)
+    return getattr(pkg, kind)(path, hadoop_conf)
+
+
+def _write_atomic(spark, fm, path, data: bytes, overwrite: bool):
+    out = fm.createAtomic(spark._jvm.org.apache.hadoop.fs.Path(str(path)), overwrite)
+    out.write(bytearray(data))
+    out.close()
+
+
+def _listing(directory):
+    # temp files carry a random UUID: mask it so two runs compare
+    return sorted(re.sub(r"[0-9a-f-]{36}", "<uuid>", n) for n in os.listdir(directory))
+
+
+def test_local_checkpoints_use_filesystem_manager(spark, tmp_path):
+    fm = _checkpoint_manager(spark, tmp_path)
+    assert fm.getClass().getName() == f"{_CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+
+
+def test_checkpoint_write_guard_matches_default_manager(spark, tmp_path):
+    """A log entry is never overwritten: ``createAtomic(p, False)`` over
+    an existing ``p`` raises on close and keeps the old bytes, exactly
+    as Spark's default FileContext manager does (both leave the failed
+    temp file and its .crc behind)."""
+    from py4j.protocol import Py4JJavaError
+
+    listings = {}
+    for kind in ("FileContextBasedCheckpointFileManager", "FileSystemBasedCheckpointFileManager"):
+        d = tmp_path / kind
+        d.mkdir()
+        fm = _checkpoint_manager(spark, d, kind)
+        _write_atomic(spark, fm, d / "0", b"old", overwrite=False)
+        with pytest.raises(Py4JJavaError, match="already exists"):
+            _write_atomic(spark, fm, d / "0", b"new", overwrite=False)
+        assert (d / "0").read_bytes() == b"old"
+        listings[kind] = _listing(d)
+    assert listings["FileSystemBasedCheckpointFileManager"] == listings["FileContextBasedCheckpointFileManager"]
+    assert ".0.crc" in listings["FileSystemBasedCheckpointFileManager"]
+
+
+def test_checkpoint_overwrite_keeps_first_version(spark, tmp_path):
+    """Where the two managers differ: ``createAtomic(p, True)`` over an
+    existing ``p``. The local file system's ``rename`` (Hive's
+    ``ProxyLocalFileSystem`` in this Spark build) refuses an existing
+    target, so the FileSystem manager keeps the first version (and its
+    temp file) where the FileContext manager replaces it. Only
+    state-store version files are written with overwrite on, and only a
+    re-executed batch writes a version twice, from the same logged
+    offsets; a ``local[N]`` master never retries a task."""
+    fm = _checkpoint_manager(spark, tmp_path)
+    _write_atomic(spark, fm, tmp_path / "1.delta", b"first", overwrite=True)
+    _write_atomic(spark, fm, tmp_path / "1.delta", b"second", overwrite=True)
+    assert (tmp_path / "1.delta").read_bytes() == b"first"
+    assert _listing(tmp_path) == [
+        "..1.delta.<uuid>.tmp.crc", ".1.delta.<uuid>.tmp", ".1.delta.crc", "1.delta"
+    ]
 
 
 def test_zip_invalidation_rereads_only_changed_archives(tmp_path, monkeypatch):

@@ -347,6 +347,69 @@ def test_cdc_apply_stream_versioned_exactly_once(spark, tmp_path):
     assert snap == {1: 70, 2: 51, 3: 7, 4: 4}
 
 
+def test_keyed_state_survives_restart(spark, tmp_path):
+    """A stateful query stopped after f0 and restarted on the same
+    checkpoint after f1 arrives computes each device's first f1 delta
+    from f0's last value: the restart read the per-device state back
+    from the state store's delta files instead of starting empty. Every
+    offset, commit, state and sink-log file of the two batches has its
+    ``.crc`` sibling."""
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType, TimestampType
+
+    from sensor_data_pipeline_spark.streaming.stateful import delta_stream_v1
+
+    schema = StructType(
+        [StructField("k", StringType()), StructField("tick_ts", TimestampType()), StructField("value", DoubleType())]
+    )
+    src, sink, ckpt = (tmp_path / d for d in ("src", "sink", "ckpt"))
+    src.mkdir()
+    f0 = [
+        ("d1", ts("2024-01-01 00:00:00"), 1.0),
+        ("d1", ts("2024-01-01 00:00:01"), 4.0),
+        ("d1", ts("2024-01-01 00:00:02"), 9.0),
+        ("d2", ts("2024-01-01 00:00:00"), 10.0),
+        ("d2", ts("2024-01-01 00:00:01"), 7.0),
+    ]
+    f1 = [
+        ("d1", ts("2024-01-01 00:00:03"), 20.0),
+        ("d1", ts("2024-01-01 00:00:04"), 21.5),
+        ("d2", ts("2024-01-01 00:00:02"), 0.5),
+    ]
+
+    def run_once():
+        q = (
+            delta_stream_v1(spark.readStream.schema(schema).parquet(f"{src}/f*"))
+            .writeStream.format("parquet")
+            .option("path", str(sink))
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        q.stop()
+
+    spark.createDataFrame(f0, schema).coalesce(1).write.parquet(f"{src}/f0")
+    run_once()
+    time.sleep(1.1)  # distinct mtime so the file source sees f1 as new
+    spark.createDataFrame(f1, schema).coalesce(1).write.parquet(f"{src}/f1")
+    run_once()
+
+    expected, prev = [], {}
+    for k, t, v in sorted(f0 + f1):
+        expected.append((k, t, v, None if k not in prev else v - prev[k]))
+        prev[k] = v
+    got = sorted(tuple(r) for r in spark.read.parquet(str(sink)).collect())
+    assert got == expected
+    # each device's first f1 row is diffed against its last f0 value
+    first_f1 = {k: min(t for k1, t, _ in f1 if k1 == k) for k in ("d1", "d2")}
+    assert [d for k, t, _, d in got if t == first_f1[k]] == [20.0 - 9.0, 0.5 - 7.0]
+
+    logs = [ckpt / "offsets", ckpt / "commits", sink / "_spark_metadata", *(ckpt / "state" / "0").iterdir()]
+    logged = [f for d in logs for f in d.iterdir() if f.is_file() and not f.name.startswith(".")]
+    assert {f.name for f in logged} >= {"0", "1", "1.delta", "2.delta"}
+    assert [f for f in logged if not (f.parent / f".{f.name}.crc").is_file()] == []
+
+
 def test_jsonl_spool_sink_two_phase_commit_and_restart(spark, tmp_path):
     """Custom DataSourceStreamWriter sink: epochs become visible only
     via commit-time renames (no temp files survive), and a restart
