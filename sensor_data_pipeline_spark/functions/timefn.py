@@ -1,4 +1,4 @@
-"""Event-time functions (SURVEY.md §2.5, T1/T2/T4).
+"""Event-time functions (SURVEY.md §2.5, T1/T2).
 
 The reference stamps every payload with ISO-8601 UTC
 (``strftime("%Y-%m-%dT%H:%M:%SZ")``, src/modules/dd/producer.c:129-134)
@@ -25,13 +25,3 @@ def iso8601_parse(s: Column) -> Column:
     (Spark 4 default) the latter aborts the job on the first malformed
     wire string — the opposite of the reference's drop-and-continue."""
     return F.try_to_timestamp(s, F.lit(ISO8601_WIRE))
-
-
-def dual_stamp(df_cols: dict[str, Column], source_ts: Column) -> dict[str, Column]:
-    """Dual-timestamp lineage (T4): carry source event time alongside
-    ingest/processing time (reference src/modules/hko/hko.cpp:123-125
-    publishes both ``hko_timestamp`` and ``fh_timestamp``)."""
-    out = dict(df_cols)
-    out["source_ts"] = source_ts
-    out["ingest_ts"] = F.current_timestamp()
-    return out

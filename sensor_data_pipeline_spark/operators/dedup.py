@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sensor_data_pipeline_spark.functions.text import doc_fingerprint, tokenize, word_hash32, word_shingles
+from sensor_data_pipeline_spark.pins import pin
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -71,10 +72,6 @@ def _exploded(df: DataFrame, id_col: str, arr_col: str, out_col: str) -> DataFra
     the optimizer's inferred size>0 filter re-evaluating the array
     expression a second time."""
     return df.select(id_col, F.explode_outer(arr_col).alias(out_col)).filter(F.col(out_col).isNotNull())
-
-
-def with_shingles(df: DataFrame, text_col: str, n: int = 3, out_col: str = "shingles") -> DataFrame:
-    return df.withColumn(out_col, word_shingles(tokenize(F.col(text_col)), n))
 
 
 def _posting_pairs(inv: DataFrame, id_col: str, key_col: str, max_freq: int | None = None) -> DataFrame:
@@ -344,7 +341,7 @@ def dedup_components(
             updated = labels
             for _ in range(substeps):
                 updated = propagate(updated)
-            labels = updated.localCheckpoint(eager=True)
+            labels = updated.transform(pin)
             label_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
             if label_sum == prev_sum:
                 break

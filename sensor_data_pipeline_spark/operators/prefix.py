@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sensor_data_pipeline_spark.pins import pin
+
 
 def global_running_sum(
     df: DataFrame,
@@ -44,8 +46,8 @@ def global_running_sum(
     range partitioning, because each row's prefix sum depends only on
     the set of rows ordered before it, not on where the cuts fall.
 
-    The range-partitioned frame is materialized with
-    ``localCheckpoint(eager=True)`` before the totals pass: the offsets
+    The range-partitioned frame is pinned eagerly (``pins.pin``, a
+    ``localCheckpoint``) before the totals pass: the offsets
     job and the final join job are SEPARATE Spark jobs, and without
     pinning, the second job re-executes the range exchange — whose
     boundary SAMPLING may cut differently — so the collected offsets
@@ -61,7 +63,7 @@ def global_running_sum(
     does.
     """
     parts = df.repartitionByRange(*( [num_partitions] if num_partitions else [] ), F.col(order_col))
-    with_pid = parts.withColumn("_pid", F.spark_partition_id()).localCheckpoint(eager=True)
+    with_pid = parts.withColumn("_pid", F.spark_partition_id()).transform(pin)
     w = Window.partitionBy("_pid").orderBy(order_col).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     local = with_pid.withColumn("_local_sum", F.sum(value_col).over(w))
     totals = (

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.functions.vector import cosine_arrow, sign_lsh_bucket
+from sensor_data_pipeline_spark.pins import pin
 
 
 def _scored(queries: DataFrame, corpus: DataFrame, query_id: str, corpus_id: str, vec_col: str) -> DataFrame:
@@ -402,7 +403,7 @@ def embedding_neardup_pairs(
     packed = (
         d.groupBy("bucket", "blk")
         .agg(F.collect_list(F.struct("id", "v")).alias("items"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     pairs = packed.select(
         "bucket", F.col("blk").alias("blk_a"), F.col("items").alias("items_a")

@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.functions.scalar import int_div
 from sensor_data_pipeline_spark.operators.joins import range_join, salted_join
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -610,7 +611,7 @@ def q77_string_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         part.join(F.broadcast(m))
         .filter(F.col("p_partkey") % F.col("modulus") == 0)
         .select("p_partkey", "p_brand", "p_name")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     a = p.select(F.col("p_brand"), F.col("p_partkey").alias("key_a"), F.col("p_name").alias("name_a"))
     b = p.select(F.col("p_brand"), F.col("p_partkey").alias("key_b"), F.col("p_name").alias("name_b"))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.operators.prefix import global_running_sum
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -215,7 +216,7 @@ def q266_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = (
         boundaries.groupBy("k")
         .agg(F.sum("delta").alias("d"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     r = global_running_sum(g, "k", "d", out_col="occ")
     peak = r.agg(F.max("occ").alias("peak"))
@@ -830,7 +831,7 @@ def q280_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id", F.col("ts").alias("tp"), F.col("event_id").alias("pid"), cents.alias("cents")
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     age_h = (
         (F.unix_micros(F.col("tp").cast("timestamp")) - F.unix_micros(F.col("tc").cast("timestamp")))
@@ -850,7 +851,7 @@ def q280_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents",
             F.element_at(weights, (age_h + 1).cast("int")).alias("w"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     w_p = Window.partitionBy("user_id", "pid")
     shared = pairs.withColumn("tot_w", F.sum("w").over(w_p))
@@ -1196,7 +1197,7 @@ def q318_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     125-cell reduce. ntile's bucket rule is closed-form in the global
     rank, so the arithmetic twin is bit-identical to both engines'
     built-in. The anchor is a 1-row broadcast; the per-user frame is
-    localCheckpoint-pinned (consumed by count + three rank passes)."""
+    pinned (consumed by count + three rank passes)."""
     from sensor_data_pipeline_spark.operators.prefix import global_ntile
 
     ev = load_table(spark, "events", sf_dir)
@@ -1213,7 +1214,7 @@ def q318_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("monetary"),
         )
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     n_users = u.count()
     r_t = global_ntile(
         u, [F.col("recency_us"), F.col("user_id")], 5, "r_q", n_users

@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.operators.dedup import dedup_components
 from sensor_data_pipeline_spark.operators.similarity import embedding_neardup_pairs
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -736,7 +737,7 @@ def q321_feature_hashing_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     never from a second pass over the token frame — the r4 form
     re-executed the whole explode+distinct upstream once per
     consumer (the multiply-consumed-frame gotcha), measured 4.55 s
-    -> 2.0 s in-round; the 4096-row census is localCheckpoint-pinned
+    -> 2.0 s in-round; the 4096-row census is pinned
     so hist and tot read materialized rows. At 100 TB the
     distinct-token reduce dominates and salts naturally; nothing
     downstream sees document mass."""
@@ -769,7 +770,7 @@ def q321_feature_hashing_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     census = (
         b.groupBy("bucket")
         .agg(F.count("*").cast("bigint").alias("degree"))
-        .localCheckpoint(eager=True)  # <=4096 rows; consumed by hist AND tot
+        .transform(pin)  # <=4096 rows; consumed by hist AND tot
     )
     hist = census.groupBy("degree").agg(
         F.count("*").cast("bigint").alias("n_buckets")

@@ -43,8 +43,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sensor_data_pipeline_spark.functions.text import tokenize, word_hash32
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
-from sensor_data_pipeline_spark.session import composed_pins
 from sensor_data_pipeline_spark.sources.tables import load_table
 
 _DUCK_WORDS = "regexp_split_to_array(text, '\\s+')"
@@ -143,11 +143,11 @@ def q223_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scoring join consume it.
     toks = d.select(
         "doc_id", F.explode(tokenize(F.col("text"))).alias("token")
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     dl = (
         toks.groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("dl"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     corpus = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -249,7 +249,7 @@ def q224_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build + the independent bigram-frequency pass).
     postings = d.select(
         "doc_id", F.posexplode(tokenize(F.col("text"))).alias("pos", "term")
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     # arrays_zip(slice, slice), NOT transform(sequence, element_at):
     # CollapseProject inlines the upstream split into every lambda
     # reference, turning the bigram build O(len^2) regex splits per
@@ -371,7 +371,7 @@ def q225_lm_fluency_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: two corpus scans (vocab candidates, token mapping) with
     the train shuffle keyed by a bounded vocabulary; the mapped token
-    stream is materialized once (localCheckpoint — the tokenized-shard
+    stream is materialized once (a pin — the tokenized-shard
     artifact every KenLM pipeline persists) and train/score both read
     it; scoring is map-only.
     """
@@ -395,7 +395,7 @@ def q225_lm_fluency_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-ran scan+explode+vocab-join (10 documents scans, round-5
     # plan_audit). Materializing the mapped stream once is exactly what
     # a production KenLM-style pipeline does with its tokenized shards.
-    m = m.localCheckpoint(eager=True)
+    m = m.transform(pin)
     nxt = m.select(F.col("doc_id").alias("doc_id2"), (F.col("pos") - 1).alias("pos2"), F.col("tok").alias("t2"))
     docbg = m.join(
         nxt, (m["doc_id"] == nxt["doc_id2"]) & (m["pos"] == nxt["pos2"])
@@ -532,26 +532,17 @@ def q226_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair join keys on cluster id so each task handles one
     cluster's block; oversized clusters get the q41 skew cap.
 
-    Materialization (r11 optimization round): the multi-consumer
-    frames are localCheckpoint-pinned — qz (5 consumers: cent,
-    coarse, veccell, assign, side), centcell (3: cells_used, assign,
-    its own build), assign (2: side, final projection) and side (2:
-    both sides of the pair join). Unpinned, every consumer re-ran
-    the ENTIRE upstream assignment pipeline (the plan held the
-    quantize transform + both argmin trees 3x over, 132 Exchange
-    nodes); pinned it runs once (10 Exchange mentions in the final plan). Solo best-of-N at
-    sf0.1: 4.30s -> 2.78s with bit-identical output. This is the
-    scale-correct shape too: at 100 TB the clustered/quantized table
-    is materialized once and the O(N*64/2) pair stage reads it from
-    storage instead of recomputing two argmin cascades per consumer
-    (guide §5 — cut lineage when a frame is reused; the pin is the
-    local analog of the SemDeDup pipeline's assignment table write).
+    Materialization: the multi-consumer frames are pinned — qz (5
+    consumers), centcell (3), assign (2) and side (both sides of the
+    pair join); unpinned, every consumer re-runs the whole quantize +
+    argmin assignment pipeline. The pin is the local analog of the
+    SemDeDup pipeline's assignment table write.
     """
     emb = load_table(spark, "embeddings", sf_dir)
     qz = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: F.round(x.cast("double") * 127, 0).cast("bigint")).alias("qv"),
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     kval = qz.agg(
         F.greatest(F.lit(_SEM_K).cast("bigint"), F.floor(F.count(F.lit(1)) / _SEM_DOCS_PER_CLUSTER)).alias("k")
     ).select("k", F.greatest(F.lit(1), F.floor(F.sqrt("k"))).cast("bigint").alias("c"))
@@ -580,7 +571,7 @@ def q226_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cid")
         .agg(F.min(F.struct("d2", "gid", "cv")).alias("m"))
         .select("cid", F.col("m.gid").alias("gid"), F.col("m.cv").alias("cv"))
-        .localCheckpoint(eager=True)  # k rows; consumed by cells_used + assign
+        .transform(pin)  # k rows; consumed by cells_used + assign
     )
     # only cells that own centroids are probe targets (no empty-cell
     # strandings under duplicate-vector degeneracy)
@@ -601,7 +592,7 @@ def q226_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id")
         .agg(F.min(F.struct("d2", "cid")).alias("m"))
         .select("vec_id", F.col("m.cid").alias("cid"))
-        .localCheckpoint(eager=True)  # (vec_id, cid); consumed by side + final projection
+        .transform(pin)  # (vec_id, cid); consumed by side + final projection
     )
     n2 = F.aggregate(
         F.transform("qv", lambda x: x * x), F.lit(0).cast("bigint"), lambda acc, x: acc + x
@@ -609,7 +600,7 @@ def q226_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = (
         qz.join(assign, "vec_id")
         .select("vec_id", "cid", "qv", n2.alias("n2"))
-        .localCheckpoint(eager=True)  # consumed by BOTH sides of the pair join
+        .transform(pin)  # consumed by BOTH sides of the pair join
     )
     a = side.select(
         F.col("vec_id").alias("id_a"), "cid", F.col("qv").alias("qv_a"), F.col("n2").alias("n2_a")
@@ -797,7 +788,7 @@ def q228_mad_anomaly_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "med",
             F.abs(F.col("cents").cast("double") - F.col("med")).alias("adev"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     mad = dev.groupBy("user_id").agg(F.expr("percentile(adev, 0.5)").alias("mad"))
     fence = F.expr(f"{_MAD_FENCE} * {_MAD_SIGMA} * mad")
@@ -904,16 +895,16 @@ def q229_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-reads in the executed plan and a 2.3s -> 10-20s blowup when
     # the base tables are cached (InMemoryTableScan pays full
     # decompression per re-read; the parquet path hid the waste behind
-    # pushdown + the OS page cache). Eager localCheckpoint, same
-    # rationale as operators/prefix.py: blocks are GC-released and a
-    # lost block fails loud instead of silently recomputing.
+    # pushdown + the OS page cache). Eager pin, same rationale as
+    # operators/prefix.py: a lost block fails loud instead of silently
+    # recomputing.
     e = (
         posts.select(F.explode(combos).alias("p"))
         .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= _TRI_MIN_W)
         .select("pa", "pb")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     # --- degree-ordered orientation -------------------------------------
     # degree over the strong-edge graph (each undirected edge counts
@@ -941,7 +932,7 @@ def q229_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(pa_first, F.col("pa")).otherwise(F.col("pb")).alias("src"),
         F.when(pa_first, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
         F.when(pa_first, F.col("degb")).otherwise(F.col("dega")).alias("dst_deg"),
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     # wedges: two out-edges of one source, destinations (deg, id)-ordered
     o1 = o.select(F.col("src").alias("a"), F.col("dst").alias("b"), F.col("dst_deg").alias("b_deg"))
     o2 = o.select(F.col("src").alias("a2"), F.col("dst").alias("c"), F.col("dst_deg").alias("c_deg"))
@@ -1207,7 +1198,7 @@ def q232_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # w (rare-term weighted postings, bounded by the df caps) feeds the
     # norms AND both posting-join sides — unpinned, each consumer re-ran
     # the scan+explode+joins (12 documents scans, round-5 plan_audit)
-    w = w.localCheckpoint(eager=True)
+    w = w.transform(pin)
     norms = w.groupBy("doc_id").agg(F.sum(F.col("wt") * F.col("wt")).cast("bigint").alias("n2"))
     wa = w.select(F.col("doc_id").alias("id_a"), "token", F.col("wt").alias("wt_a"))
     wb = w.select(F.col("doc_id").alias("id_b"), F.col("token").alias("token_b"), F.col("wt").alias("wt_b"))
@@ -1336,16 +1327,15 @@ def q235_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensor_data_pipeline_spark.operators.prefix import global_running_sum
 
     li = load_table(spark, "lineitem", sf_dir)
-    # pin the distinct-value frame (the REDUCED frame — r10 pin rule):
-    # it feeds both the prefix scan and the grand total, and unpinned
-    # each consumer re-ran the full-column groupBy (r11 optimization
-    # round). Lazy: the scan's offsets job materializes every
+    # pin the distinct-value (REDUCED) frame: it feeds both the prefix
+    # scan and the grand total, each of which would otherwise re-run
+    # the full-column groupBy. Lazy: the scan's offsets job reads every
     # partition, the total reads the filled blocks.
     vc = (
         li.select(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint").alias("v"))
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(pin, lazy=True)
     )
     cum = global_running_sum(vc, "v", "cnt", out_col="running")
     total = vc.agg(F.sum("cnt").cast("bigint").alias("n_total"))
@@ -1472,25 +1462,16 @@ def q236_span_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 64-bit collision would need ~2^32 distinct grams to be likely;
     # if one ever fired, the differential oracle (which compares by
     # the actual strings) would catch the false span.
-    # pin the hashed-window table: it feeds BOTH the shared-gram census
-    # and the membership join, and its build (tokenize + 8-way zip +
-    # xxhash per window) is the most expensive map in the suite —
-    # unpinned it ran twice (r11 optimization round; solo best-of-N
-    # 3.67s -> 2.98s). Lazy pin: both consumers sit inside the one
-    # final action and fully materialize, so the pin fills on first
-    # use and the second consumer reads blocks. At 100 TB this is the
-    # standard "materialize the fingerprint table once" step of the
-    # Lee et al. pipeline (13 bytes/window vs re-tokenizing the text).
-    # composed_pins: under AQE the lazy pin's adaptive stages would
-    # materialize at BUILD time (a driver-blocking job); scoped
-    # AQE-off it plans statically and fills inside the consuming
-    # action. Interleaved same-session A/B (r12): 3.10s -> 2.57s.
-    with composed_pins(spark):
-        g = base.select(
-            "doc_id", F.posexplode("z").alias("pos0", "p")
-        ).select(
-            "doc_id", (F.col("pos0") + 1).alias("pos"), F.xxhash64("p").alias("gh")
-        ).localCheckpoint(eager=False)
+    # pin the hashed-window table (the Lee et al. "fingerprint table
+    # once" step): the shared-gram census and the membership join both
+    # read it, and its tokenize + zip + xxhash build is the costliest
+    # map in the suite. Lazy static build: it fills inside the one
+    # final action (A/B 3.10s -> 2.57s against an AQE build).
+    g = base.select(
+        "doc_id", F.posexplode("z").alias("pos0", "p")
+    ).select(
+        "doc_id", (F.col("pos0") + 1).alias("pos"), F.xxhash64("p").alias("gh")
+    ).transform(pin, lazy=True, adaptive=False)
     shared = g.groupBy("gh").agg(F.count_distinct("doc_id").alias("dfc")).filter(F.col("dfc") >= 2).select("gh")
     hits = g.join(shared, "gh").select("doc_id", "pos")
     wdoc = Window.partitionBy("doc_id").orderBy("pos")
@@ -1832,7 +1813,7 @@ def q239_mixture_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (
         d.groupBy("source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     w = s.select(
         "source",
@@ -2011,15 +1992,15 @@ def q241_join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFram
     a = (
         li.groupBy(F.col("l_partkey").alias("k"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     b = (
         o.groupBy((F.col("o_custkey") % 2000).alias("k"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
-    ta = a.orderBy(F.col("cnt").desc(), "k").limit(_CARD_TOPK).localCheckpoint(eager=True)
-    tb = b.orderBy(F.col("cnt").desc(), "k").limit(_CARD_TOPK).localCheckpoint(eager=True)
+    ta = a.orderBy(F.col("cnt").desc(), "k").limit(_CARD_TOPK).transform(pin)
+    tb = b.orderBy(F.col("cnt").desc(), "k").limit(_CARD_TOPK).transform(pin)
     est_top = (
         ta.select("k", F.col("cnt").alias("cnt_a"))
         .join(tb.select("k", F.col("cnt").alias("cnt_b")), "k")
@@ -2476,7 +2457,7 @@ def q248_frequency_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("half_id") == 0, 1).otherwise(0)).cast("bigint").alias("c1"),
             F.sum(F.when(F.col("half_id") == 1, 1).otherwise(0)).cast("bigint").alias("c2"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     n = c.agg(
         F.sum("c1").cast("bigint").alias("n1"),
@@ -2764,7 +2745,7 @@ def q251_refpoint_pruned_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (round-5 plan_audit finding)
     ids = traj.withColumn(
         "rid", F.row_number().over(Window.orderBy("user_id"))
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     refs = ids.filter(F.col("rid") <= _RP_NREF).select(
         F.col("user_id").alias("rid_user"), F.col("v").alias("rv")
     )
@@ -2891,7 +2872,7 @@ def q252_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_chars").cast("bigint") * 1000 + F.col("doc_id") % 1000).alias("score"),
             (F.col("doc_id") < F.col("mid")).alias("is_old"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     def summary(df: DataFrame) -> DataFrame:
         return df.orderBy(F.col("score").desc(), "doc_id").limit(_ITK_SUMMARY).select("doc_id", "score")
@@ -3263,7 +3244,7 @@ def q257_ks_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("doc_id") < F.col("mid"), 1).otherwise(0)).cast("bigint").alias("c1"),
             F.sum(F.when(F.col("doc_id") >= F.col("mid"), 1).otherwise(0)).cast("bigint").alias("c2"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     n = c.agg(F.sum("c1").cast("bigint").alias("n1"), F.sum("c2").cast("bigint").alias("n2"))
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)

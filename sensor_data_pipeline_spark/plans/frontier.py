@@ -40,8 +40,8 @@ from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.functions.scalar import int_div
 from sensor_data_pipeline_spark.functions.text import tokenize
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
-from sensor_data_pipeline_spark.session import composed_pins
 from sensor_data_pipeline_spark.sources.tables import load_table, register_views
 
 _DUCK_WORDS = "regexp_split_to_array(text, '\\s+')"
@@ -254,8 +254,7 @@ def q326_prefix_filter_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.unhex(F.md5(F.expr("concat_ws(' ', p.*)"))).alias("fp"))
         .distinct()
     )
-    # lazy pin (r11): consumers all sit in the one final action
-    g = g.localCheckpoint(eager=False)  # consumed 3x: freq, prefix rank, verify sets
+    g = g.transform(pin, lazy=True)  # consumed 3x: freq, prefix rank, verify sets
     sizes = g.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n"))
     freq = g.groupBy("fp").agg(F.count("*").cast("bigint").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "fp")
@@ -782,12 +781,9 @@ def q331_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "fp")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
-    # consumed 3x: totals + both join sides. composed_pins (r12): the
-    # pin's internal plan builds statically instead of materializing
-    # adaptive stages one job at a time; interleaved same-session A/B
-    # over two sessions: off wins 5/6 pairs, mean 2.44s -> 2.16s.
-    with composed_pins(docs.sparkSession):
-        bag = bag.localCheckpoint(eager=True)
+    # consumed 3x: totals + both join sides; a static build beats
+    # AQE's one-job-per-stage build (A/B mean 2.44s -> 2.16s)
+    bag = bag.transform(pin, adaptive=False)
     tot = bag.groupBy("doc_id").agg(F.sum("c").cast("bigint").alias("tc"))
     a = bag.select(
         F.col("doc_id").alias("doc_a"), "fp", F.col("c").alias("c_a")
@@ -952,10 +948,7 @@ def q332_weighted_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "sh")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
-    # consumed 3x: elems, totals, verify. Lazy (r11): all consumers sit
-    # inside the one final action and fully materialize — the pin fills
-    # on first use instead of blocking the driver on a separate job.
-    bag = bag.localCheckpoint(eager=False)
+    bag = bag.transform(pin, lazy=True)  # consumed 3x: elems, totals, verify
     elems = bag.select(
         "doc_id",
         F.explode(
@@ -1002,21 +995,13 @@ def q332_weighted_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         ).alias("bb"),
-    ).select("doc_id", "bb.band_id", "bb.band_hash").repartition(
-        "band_id", "band_hash"
-    ).sortWithinPartitions("band_id", "band_hash").localCheckpoint(eager=False)
-    # ^ pin: REDUCED frame (4 fixed-width rows/doc, the signature
-    # matrix) — PRE-PARTITIONED AND PRE-SORTED on the band key
-    # (r12, the q302 edge-pin pattern): localCheckpoint preserves
-    # outputPartitioning/outputOrdering in the LogicalRDD leaf, so the
-    # hot-bucket census groupBy AND both sides of the band self-join
-    # reuse hashpartitioning(band_id, band_hash) — no Exchange and no
-    # per-side Sort in the candidate stage (measured: cand noop 1.17s
-    # -> 0.62s cold, 0.60 -> 0.51 steady; one exchange at pin build
-    # buys three away, guide §2.4) — with THREE consumers below
-    # (hot list + both self-join
-    # sides) — unpinned, the md5 min-hash fold re-executes per side
-    # occupancy cap (see _WMH_OCC_CAP note): hot buckets are FEW by
+    ).select("doc_id", "bb.band_id", "bb.band_hash").transform(pin, lazy=True)
+    # ^ pin: the REDUCED signature frame (4 fixed-width rows/doc) has
+    # three consumers (hot list + both self-join sides); unpinned, the
+    # md5 min-hash fold re-executes per side. Keying the pin on the
+    # band (a static build) cuts the plan from 20 Exchanges and 15
+    # Sorts to 12 and 11 but ran ~1.5x slower at sf0.1, so it is unkeyed.
+    # Occupancy cap (see _WMH_OCC_CAP note): hot buckets are FEW by
     # definition (occupancy > cap), so exclude them with a broadcast
     # anti-join against the aggregated hot list — a corpus-wide
     # window count would instead sort every partition of the bands
@@ -1290,7 +1275,6 @@ def q334_packing_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_MAT_DIMS = (16, 32, 64)  # truncation prefixes audited (64 = full)
 _MAT_QUERIES = 8
 _MAT_K = 5
 
@@ -1426,7 +1410,7 @@ def q336_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosd.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _MAT_K)
         .select("query_id", "match_id", "d")
-        .localCheckpoint(eager=False)  # consumed as probe AND baseline sides (lazy, r11)
+        .transform(pin, lazy=True)  # consumed as probe AND baseline sides
     )
     full_top = tops.filter(F.col("d") == 64).select(
         F.col("query_id").alias("fq"), F.col("match_id").alias("fm")
@@ -1509,58 +1493,48 @@ def q335_rouge_candidate_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     every output is an exact integer."""
     d = load_table(spark, "documents", sf_dir)
     # tokenize once: shingles AND bigrams derive from this frame. The
-    # repartition BEFORE the pin spreads the token arrays across the
-    # cluster: a pathologically-laid-out input (the sf10 replica is one
-    # 500k-row row group — parquet cannot split inside a row group, so
-    # the scan is ONE task) would otherwise pin single-partition blocks
-    # and serialize every downstream per-row md5/explode pass on one
-    # core (measured: 21.5x at the 100x stress vs the 14.9x text-mass
-    # bar; spread, the three derived passes parallelize).
-    # composed_pins: under AQE a lazy pin still materializes its
-    # adaptive stages at BUILD time (driver-blocking, one job per
-    # pin); with the build scoped AQE-off the three pins plan
-    # statically and fill as ONE composed pipelined action at first
-    # use. Interleaved same-session A/B (r12): 3.94s -> 2.88s. The
-    # candidate/verify consumers below are planned at ACTION time,
-    # outside the scope, and keep AQE.
-    with composed_pins(d.sparkSession):
-        wdf = (
-            d.select("doc_id", tokenize(F.col("text")).alias("a"))
-            .repartition(F.col("doc_id"))
-            .localCheckpoint(eager=False)
+    # repartition spreads the token arrays: an unsplittable one-row-
+    # group input would pin single-partition blocks and run every
+    # derived pass on one core (21.5x at the 100x stress). Lazy static
+    # builds: the three pins fill as one pipelined action at first use
+    # (A/B 3.94s -> 2.88s against AQE builds).
+    wdf = (
+        d.select("doc_id", tokenize(F.col("text")).alias("a"))
+        .repartition(F.col("doc_id"))
+        .transform(pin, lazy=True, adaptive=False)
+    )
+    sh = (
+        wdf.select(
+            "doc_id",
+            # guard short docs: Spark's sequence(1, 0) REVERSES to
+            # [1, 0] instead of yielding empty, so the bound must be
+            # branched, not clamped
+            F.explode(
+                F.expr(
+                    "CASE WHEN size(a) >= 4 THEN transform(sequence(1, size(a) - 3), "
+                    "i -> concat_ws(' ', slice(a, i, 4))) ELSE array() END"
+                )
+            ).alias("s"),
         )
-        sh = (
-            wdf.select(
-                "doc_id",
-                # guard short docs: Spark's sequence(1, 0) REVERSES to
-                # [1, 0] instead of yielding empty, so the bound must be
-                # branched, not clamped
-                F.explode(
-                    F.expr(
-                        "CASE WHEN size(a) >= 4 THEN transform(sequence(1, size(a) - 3), "
-                        "i -> concat_ws(' ', slice(a, i, 4))) ELSE array() END"
-                    )
-                ).alias("s"),
-            )
-            .select("doc_id", F.md5(F.col("s")).alias("fp"))
-            .distinct()
-            .localCheckpoint(eager=False)  # both posting self-join sides
+        .select("doc_id", F.md5(F.col("s")).alias("fp"))
+        .distinct()
+        .transform(pin, lazy=True, adaptive=False)  # both posting self-join sides
+    )
+    bg = (
+        wdf.select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    "CASE WHEN size(a) >= 2 THEN "
+                    "zip_with(slice(a, 1, size(a) - 1), slice(a, 2, size(a) - 1), "
+                    "(x, y) -> concat(x, ' ', y)) ELSE array() END"
+                )
+            ).alias("g0"),
         )
-        bg = (
-            wdf.select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        "CASE WHEN size(a) >= 2 THEN "
-                        "zip_with(slice(a, 1, size(a) - 1), slice(a, 2, size(a) - 1), "
-                        "(x, y) -> concat(x, ' ', y)) ELSE array() END"
-                    )
-                ).alias("g0"),
-            )
-            .select("doc_id", F.md5(F.col("g0")).alias("g"))
-            .distinct()
-            .localCheckpoint(eager=False)  # per-doc sizes + both verify sides
-        )
+        .select("doc_id", F.md5(F.col("g0")).alias("g"))
+        .distinct()
+        .transform(pin, lazy=True, adaptive=False)  # per-doc sizes + both verify sides
+    )
     cand = (
         sh.select(F.col("doc_id").alias("doc_a"), "fp")
         .join(sh.select(F.col("doc_id").alias("doc_b"), "fp"), "fp")
@@ -1691,7 +1665,6 @@ def q337_curriculum_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BLOOM_M2 = 256  # deliberately undersized (bits) so false positives occur
-_BLOOM_K2 = 2  # hash functions (md5 seeds 21, 22)
 
 
 @register(
@@ -1780,9 +1753,9 @@ def q338_bloom_dedup_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(F.col("text")).alias("fp"),
             (F.col("doc_id") < F.col("mid")).alias("is_old"),
         )
-        .localCheckpoint(eager=True)  # build side AND probe side
+        .transform(pin)  # build side AND probe side
     )
-    a_fp = h.filter(F.col("is_old")).select("fp").distinct().localCheckpoint(eager=True)
+    a_fp = h.filter(F.col("is_old")).select("fp").distinct().transform(pin)
     p1 = F.pmod(word_hash32(F.col("fp"), seed=21), F.lit(_BLOOM_M2))
     p2 = F.pmod(word_hash32(F.col("fp"), seed=22), F.lit(_BLOOM_M2))
     pos = a_fp.select(p1.alias("p1"), p2.alias("p2"))
@@ -1841,8 +1814,6 @@ def q338_bloom_dedup_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RNN_BITS_MIN = 8  # bucket width floor (256 buckets)
-_RNN_OCC = 16  # target bucket occupancy the width scales to hold
 _RNN_K = 3  # neighbor list depth on each side
 
 # occupancy-adaptive bucket width, integer-exact in BOTH engines (no
@@ -1938,7 +1909,7 @@ def q339_reciprocal_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # broadcast (4 physical embeddings reads per run — invisible to
         # the round-6 audit because they happened inside the top-k pin
         # build; the round-7 pin_scans digest surfaced it, ADVICE r6)
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     a = base.select(F.col("vec_id").alias("src"), F.col("v").alias("av"), "bucket")
     b = base.select(F.col("vec_id").alias("dst"), F.col("v").alias("bv"), "bucket")
@@ -1956,7 +1927,7 @@ def q339_reciprocal_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _RNN_K)
         .select("src", "dst", "cosine")
-        .localCheckpoint(eager=True)  # forward AND reverse mutuality sides
+        .transform(pin)  # forward AND reverse mutuality sides
     )
     rev = top.select(F.col("src").alias("r_src"), F.col("dst").alias("r_dst"))
     return (

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.functions.text import tokenize
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -240,7 +241,7 @@ def q341_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.col("doc_id")
             ).alias("k"),
         )
-        .localCheckpoint(eager=True)  # consumed by the budget agg AND the prefix scan
+        .transform(pin)  # consumed by the budget agg AND the prefix scan
     )
     budget = per_doc.agg(F.expr("sum(ntok) * 2 DIV 5").alias("budget"))
     s = global_running_sum(per_doc, "k", "ntok", out_col="cum")
@@ -683,7 +684,7 @@ def q344_decontamination_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         postings.filter(F.col("doc_id") % _DECON_MOD == 0)
         .select("wd", "gram")
         .distinct()
-        .localCheckpoint(eager=False)  # two consumers: flag join + census (lazy, r11)
+        .transform(pin, lazy=True)  # two consumers: flag join + census
     )
     flagged = (
         postings.filter(F.col("doc_id") % _DECON_MOD != 0)
@@ -801,7 +802,7 @@ def q346_waterfill_source_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the level-bracket scan AND the remainder ranking — unpinned,
         # each consumer re-derived it from parquet (4 documents scans,
         # caught by this round's pin-aware audit before shipping)
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     tot = census.agg(
         F.count(F.lit(1)).cast("bigint").alias("s"),
@@ -943,7 +944,7 @@ def q347_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         load_table(spark, "embeddings", sf_dir)
         .select("vec_id", F.col("embedding").alias("v"))
-        .localCheckpoint(eager=True)  # 4 consumers: panels, assignment, brute force
+        .transform(pin)  # 4 consumers: panels, assignment, brute force
     )
     cents = emb.filter(F.col("vec_id") < _IVF_CELLS).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")

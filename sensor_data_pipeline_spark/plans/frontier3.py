@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.functions.text import tokenize
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -171,7 +172,7 @@ def q349_zipf_octave_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # <= 64 rows; two consumers (total + profile) — without the pin
         # the corpus tokenizes twice for the 1-row total
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     w = Window.orderBy("octave")
     total = oct_df.agg(F.sum("mass").alias("total"))
@@ -250,7 +251,7 @@ def q350_kanonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("sz"))
         # bounded by the QI domain product; two consumers (total +
         # ladder) — without the pin the row-scale table is read twice
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     ks = spark.createDataFrame([(k,) for k in _K_LEVELS], "k int")
     total = cls.agg(F.sum("sz").alias("n_rows"))
@@ -454,7 +455,7 @@ def q352_epoch_repeat_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bounded source panel; two consumers (the budget row + the
         # per-source arithmetic) — without the pin the corpus
         # tokenizes twice
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     tot = sup.agg(
         F.expr(
@@ -666,7 +667,7 @@ def q354_oov_rate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("lang", "source", F.explode(tokenize(F.col("text"))).alias("token"))
         .groupBy("token", "lang", "source")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)  # two consumers: vocab top-K + OOV roll-up
+        .transform(pin)  # two consumers: vocab top-K + OOV roll-up
     )
     wv = Window.orderBy(F.col("total").desc(), "token")
     vocab = (
@@ -794,7 +795,7 @@ def q355_split_balance_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bounded stratum frame; two consumers (global totals + the
         # per-stratum chi-square) — without the pin the corpus is
         # hashed and scanned twice
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     tot = st.agg(
         F.sum("o_train").alias("n_train"), F.sum("o_val").alias("n_val")
@@ -1008,7 +1009,7 @@ def q357_source_tv_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         # three consumers: global census, per-source totals, the
         # present-sum join — without the pin the corpus tokenizes 3x
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     gt = tc.groupBy("token").agg(F.sum("c").cast("bigint").alias("ct"))
     ns = tc.groupBy("source").agg(F.sum("c").cast("bigint").alias("n_s"))

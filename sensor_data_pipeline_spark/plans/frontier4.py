@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.functions.text import tokenize, word_hash32
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -318,7 +319,7 @@ def q367_hll_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs = (
         rho.groupBy("source", "j")
         .agg(F.max("r").alias("mj"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     merged = regs.groupBy("j").agg(F.max("mj").alias("mj")).select(
         F.lit("(all)").alias("source"), "j", "mj"
@@ -440,9 +441,7 @@ def q378_hll_error_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tw pin KEPT: sh fans out to TWO consumers (the register fold
     # and the exact-distinct audit), so unpinned the K-doc sample +
     # tokenize would execute twice
-    tw = samp.select("source", tokenize(F.col("text")).alias("w")).localCheckpoint(
-        eager=True
-    )
+    tw = samp.select("source", tokenize(F.col("text")).alias("w")).transform(pin)
     sh = tw.select("source", F.explode(_shingles_dup(F.col("w"))).alias("s"))
     hv = word_hash32(F.col("s"), seed=_HLL_SEED)
     rho = sh.withColumn("h_", hv).select(
@@ -455,7 +454,7 @@ def q378_hll_error_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs = (
         rho.groupBy("source", "j")
         .agg(F.max("r").alias("mj"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     merged = regs.groupBy("j").agg(F.max("mj").alias("mj")).select(
         F.lit("(all)").alias("source"), "j", "mj"
@@ -470,7 +469,7 @@ def q378_hll_error_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # exact audit over the K-doc sample only: the distinct shuffle is
     # sample-bounded; pinned (two consumers: per-source + global)
-    ss = sh.distinct().localCheckpoint(eager=True)
+    ss = sh.distinct().transform(pin)
     exact = ss.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("exact_distinct")
     )
@@ -582,7 +581,7 @@ def q368_source_minhash_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = (
         tw.select("source", F.explode(_shingles_dup(F.col("w"))).alias("s_"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     sig_cols = []
     for s in _MH_SEEDS:

@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.functions.text import tokenize
 from sensor_data_pipeline_spark.functions.vector import cosine
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -206,7 +207,7 @@ def q374_conformal_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = (
         cal.groupBy("score")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     # coalesce: an empty calibration half gives sum(cnt)=NULL on the
     # histogram while the oracle's count(*) gives 0 (k_rank=1) —
@@ -428,7 +429,7 @@ def q376_hll_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("doc_id"), F.lit(2)).alias("parity"),
         "source",
         tokenize(F.col("text")).alias("w"),
-    ).localCheckpoint(eager=True)  # tokenize once (the q335/q367 pin)
+    ).transform(pin)  # tokenize once (the q335/q367 pin)
     sh = tw.select(
         "parity", "source", F.explode(_shingles_dup(F.col("w"))).alias("s")
     )
@@ -446,7 +447,7 @@ def q376_hll_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     pregs = (
         rho.groupBy("parity", "source", "j")
         .agg(F.max("r").alias("mj"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     s_of = (
         f"CAST(sum(CAST(1 AS BIGINT) << (33 - mj))"

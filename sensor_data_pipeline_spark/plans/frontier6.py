@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.functions.text import tokenize
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -225,7 +226,7 @@ def q380_unseen_mass_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir)
     # Single consumer — NO pin. The token array is named in its own
     # projection (the q335/q370 anti-inlining shape), but the lineage
-    # is linear, so a localCheckpoint here would be a pure extra
+    # is linear, so a pin here would be a pure extra
     # materialization of the largest intermediate (VERDICT r10 §wrong
     # item 1). Measured at sf0.1: the optimized plan keeps exactly one
     # split() (CollapseProject's reference-count heuristic refuses to
@@ -540,7 +541,7 @@ def q383_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ff = (
         cnt.groupBy("c")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_types"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     cw = Window.orderBy(F.col("c").desc()).rowsBetween(Window.unboundedPreceding, 0)
     cum = ff.select(
@@ -661,7 +662,7 @@ def q384_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_h"),
         F.sum("n_chars").cast("bigint").alias("s1"),
         F.sum(F.col("n_chars") * F.col("n_chars")).cast("bigint").alias("s2"),
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     w_expr = (
         "sqrt(CAST(CAST(n_h AS DECIMAL(38,0)) * s2"
         " - CAST(s1 AS DECIMAL(38,0)) * s1 AS DOUBLE))"
@@ -828,7 +829,7 @@ def q385_hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("c").cast("bigint").alias("lo"),
             F.max("c").cast("bigint").alias("hi"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     cdf = hist.select(
         "bucket",
@@ -873,7 +874,7 @@ def q385_hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hi",
             (F.col("cum") - F.col("cnt")).alias("cum_before"),
         )
-        .localCheckpoint(eager=True)  # 3 rows, 3 consumers
+        .transform(pin)  # 3 rows, 3 consumers
     )
     sub = (
         v.join(
@@ -1023,7 +1024,7 @@ def q386_kish_design_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_h"),
         F.sum("n_chars").cast("bigint").alias("s1"),
         F.sum(F.col("n_chars") * F.col("n_chars")).cast("bigint").alias("s2"),
-    ).localCheckpoint(eager=True)  # bounded strata frame, four consumers
+    ).transform(pin)  # bounded strata frame, four consumers
 
     h_cnt = strata.agg(
         F.count(F.lit(1)).cast("bigint").alias("h"),

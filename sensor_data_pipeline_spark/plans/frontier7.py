@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.functions.text import tokenize
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -133,7 +134,7 @@ def q387_source_entropy_typicality(spark: SparkSession, sf_dir: str) -> DataFram
     cnt = (
         dup.groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)  # vocab-bounded; 3 consumers
+        .transform(pin)  # vocab-bounded; 3 consumers
     )
     tot = cnt.groupBy("source").agg(
         F.sum("c").cast("bigint").alias("n_s"),
@@ -258,7 +259,7 @@ def q388_bigram_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cy"),
         )
-        .localCheckpoint(eager=True)  # vocab-bounded; 3 consumers
+        .transform(pin)  # vocab-bounded; 3 consumers
     )
     btot = marg.agg(F.sum("cx").cast("bigint").alias("b"))
     scored = (
@@ -400,7 +401,7 @@ def q389_multiprobe_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < _MP_PANEL)
     cand = sign_lsh_multiprobe_candidates(
         queries, emb, n_bits=_MP_BITS, n_probes=_MP_PROBES
-    ).localCheckpoint(eager=True)  # panel-bounded; 2 consumers below
+    ).transform(pin)  # panel-bounded; 2 consumers below
     gt = brute_force_topk(queries, emb, k=_MP_K).select("query_id", "match_id")
     depths = emb.sparkSession.createDataFrame(
         [(0,), (_MP_PROBES,)], "probe_depth bigint"
@@ -724,7 +725,7 @@ def q392_langid_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "acc_ppm"
             ),
         )
-        .localCheckpoint(eager=True)  # 10 rows; 2 consumers (ece + output)
+        .transform(pin)  # 10 rows; 2 consumers (ece + output)
     )
     ece = bins.agg(
         F.expr(

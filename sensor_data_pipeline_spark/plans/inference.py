@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from sensor_data_pipeline_spark.functions.text import tokenize
 from sensor_data_pipeline_spark.operators.spatial import grid_nn_join
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -610,7 +611,7 @@ def q294_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = (
         li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     nb = baskets.agg(F.countDistinct("ok").cast("bigint").alias("n_orders"))
     items = baskets.groupBy("pk").agg(F.count("*").cast("bigint").alias("n_item"))
@@ -805,9 +806,8 @@ def q296_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     order); every input to those sums is an exact BIGINT count."""
     ev = load_table(spark, "events", sf_dir)
     # pin the tiny joint histogram: five downstream consumers (marginals,
-    # total, level counts) would each re-scan events otherwise —
-    # localCheckpoint collapses the plan to ONE parquet scan (the repo's
-    # multiply-consumed-frame rule; see the verify skill)
+    # total, level counts) would each re-scan events otherwise — the
+    # pin collapses the plan to ONE parquet scan
     j = (
         ev.select(
             F.col("event_type").alias("x"),
@@ -815,7 +815,7 @@ def q296_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("x", "y")
         .agg(F.count("*").cast("bigint").alias("nxy"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     mx = j.groupBy("x").agg(F.sum("nxy").cast("bigint").alias("nx"))
     my = j.groupBy("y").agg(F.sum("nxy").cast("bigint").alias("ny"))
@@ -1875,7 +1875,7 @@ def q315_bh_fdr_control(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("s"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     t = g.agg(
         F.sum("n").cast("bigint").alias("tn"), F.sum("s").cast("bigint").alias("ts")
@@ -2223,7 +2223,7 @@ def q319_psi_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a second scan binned map-only against broadcast fences —
     shuffle payload is 10 rows. At 100 TB both scans are
     embarrassingly parallel. The (half, cents) domain frame is
-    localCheckpoint-pinned: it feeds the fences AND both bin-count
+    pinned: it feeds the fences AND both bin-count
     consumers, and unpinned each consumer re-derived it from the
     parquet scan (8 scans -> 2, round-5 plan_audit)."""
     ev = load_table(spark, "events", sf_dir)
@@ -2245,7 +2245,7 @@ def q319_psi_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     hc = (
         halves.groupBy("half", "cents")
         .agg(F.count("*").cast("bigint").alias("nn"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     dom = hc.where(F.col("half") == 0).select("cents", F.col("nn").alias("c"))
     wc = Window.orderBy("cents")

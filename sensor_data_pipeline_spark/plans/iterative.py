@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -344,13 +345,9 @@ def q269_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per layer: node count and an id checksum, so a single misplaced
     frontier node flips the hash.
 
-    Pins are LAZY (eager=False, r11 optimization round, same change
-    and rationale as q302): plan truncation is identical, but the
-    hops execute as one composed action instead of 5 driver-blocking
-    jobs; every consumer (per-hop groupBy, final agg) materializes
-    all partitions, so the partial-materialization hazard does not
-    apply. Solo best-of-N at sf0.1: 2.90s -> 2.45s, bit-identical
-    output."""
+    Pins are lazy, as in q302: the hops run as one composed action
+    instead of 5 driver-blocking jobs (sf0.1 best-of-N 2.90s ->
+    2.45s), and every consumer reads all partitions."""
     li = load_table(spark, "lineitem", sf_dir)
     sup = load_table(spark, "supplier", sf_dir)
     e = (
@@ -361,11 +358,10 @@ def q269_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # the symmetrized edge list is the loop invariant: every hop joins
-    # it, so pin it once (localCheckpoint, the q229/prefix-scan
-    # discipline) instead of re-deriving distinct edges per hop
+    # it, so pin it once instead of re-deriving distinct edges per hop
     eu = e.unionAll(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=False)
+    ).transform(pin, lazy=True)
     dist = (
         sup.filter(F.col("s_suppkey") % 100 == 1)
         .select((F.col("s_suppkey") * 2 + 1).alias("node"))
@@ -385,7 +381,7 @@ def q269_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
             dist.unionAll(frontier)
             .groupBy("node")
             .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=False)
+            .transform(pin, lazy=True)
         )
     return (
         dist.groupBy(F.col("d").cast("bigint").alias("dist"))
@@ -447,9 +443,9 @@ def q302_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, symmetric deterministic integer weights): each round joins
     the frontier distances to the edge list and min-combines — the
     weighted generalization of q269's BFS k-hop. Every round's result
-    is localCheckpoint-pinned (the repo's loop-invariant rule: unpinned,
-    round k re-executes rounds 1..k-1, a 2^k lineage blowup), and so is
-    the 6-times-consumed edge list. Distances are exact BIGINTs. The
+    is pinned (the repo's loop-invariant rule: unpinned, round k
+    re-executes rounds 1..k-1, a 2^k lineage blowup), and so is the
+    6-times-consumed edge list. Distances are exact BIGINTs. The
     oracle replays the identical rounds as chained min-relaxation CTEs
     (NOT a recursive path enumeration, which explodes on dense graphs).
     At 100 TB: per round one hash join shuffle on src + one min
@@ -457,27 +453,18 @@ def q302_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a real cluster would switch to delta-frontier joins once the
     active set shrinks.
 
-    The pins are LAZY (eager=False, r11 optimization round): the plan
-    truncation that kills the 2^k lineage blowup happens at build time
-    either way (localCheckpoint returns a LogicalRDD frame), but lazy
-    pins let all 6 rounds + the edge build execute as ONE composed
-    action instead of 8 driver-blocking jobs — the stages pipeline and
-    the scheduler overlaps round k's tail with round k+1's head (guide
-    §2.6). Safe here because every consumer (groupBy per round, final
-    orderBy) materializes ALL partitions — the partial-materialization
-    hazard that forces prefix.py's eager pin does not apply. Solo
-    best-of-N at sf0.1: 4.29s -> 3.97s (prototype session measured
-    3.71s -> 3.27s on a quieter host), bit-identical output."""
+    The pins are lazy: all 6 rounds and the edge build run as ONE
+    composed action instead of 8 driver-blocking jobs (sf0.1 best-of-N
+    4.29s -> 3.97s). Every consumer (groupBy per round, final orderBy)
+    reads all partitions, so no pin needs a fill-in job."""
     li = load_table(spark, "lineitem", sf_dir)
-    # pinned: the (order, supplier) incidence list feeds BOTH sides of
-    # the co-supply self-join, and the symmetric edge union duplicates
-    # that subtree again — unpinned, the edges pin build scanned
-    # lineitem 4x per run (invisible to the round-6 audit, surfaced by
-    # the round-7 pin_scans digest, ADVICE r6); pinned it scans once
+    # the (order, supplier) incidence list feeds both sides of the
+    # co-supply self-join, and the symmetric edge union doubles that
+    # again: unpinned, the edge build scans lineitem 4x per run
     pairs = (
         li.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin, lazy=True)
     )
     a = pairs.select("ok", F.col("s").alias("src"))
     b = pairs.select("ok", F.col("s").alias("dst"))
@@ -488,23 +475,12 @@ def q302_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     w = (F.col("src") + F.col("dst")) % 20 + 1
-    # pin the edge list PRE-PARTITIONED AND PRE-SORTED on the join key:
-    # Dataset.localCheckpoint preserves outputPartitioning/outputOrdering
-    # in the LogicalRDD leaf, so all 6 relaxation joins reuse
-    # hashpartitioning(src) — no per-round Exchange or Sort of the big
-    # side (guide §2.4: establish the partitioning once). One exchange
-    # at pin time buys six away; interleaved same-session A/B (r12):
-    # 5.62s -> 5.05s best and the run band tightened 5.6-6.8 -> 5.05-5.24
-    # (the pre-partitioned invariant removes the per-round shuffle whose
-    # GC wobble dominated this query's variance). This is the standard
-    # Pregel layout: edges hash-partitioned by source once, messages
-    # (dist) shuffled per superstep.
+    # consumed by all 6 rounds. Unkeyed: a pin keyed on src (a static
+    # build) ran 1.1-1.2x slower at sf0.1 than this AQE build
     edges = (
         e0.select("src", "dst", w.alias("w"))
         .unionByName(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), w.alias("w")))
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-        .localCheckpoint(eager=False)
+        .transform(pin, lazy=True)
     )
     dist = (
         li.sparkSession.range(_BF_SOURCE, _BF_SOURCE + 1)
@@ -519,6 +495,6 @@ def q302_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
             dist.unionByName(relax)
             .groupBy("node")
             .agg(F.min("d").cast("bigint").alias("d"))
-            .localCheckpoint(eager=False)
+            .transform(pin, lazy=True)
         )
     return dist.select("node", F.col("d").alias("dist")).orderBy("node")

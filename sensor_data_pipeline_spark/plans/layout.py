@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -161,7 +162,7 @@ def q213_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         F.expr(f"{_interleave_expr('x', 'y', 'DIV')} DIV {65536 // _ZFILES}").alias("zfile"),
         F.expr(f"x DIV {256 // _ZFILES}").alias("pfile"),
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     tagged = placed.select(
         "x",
         "y",

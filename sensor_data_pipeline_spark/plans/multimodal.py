@@ -28,6 +28,7 @@ from sensor_data_pipeline_spark.operators.multimodal import (
     sample_frames,
     synthesize_media,
 )
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -273,7 +274,7 @@ def q215_media_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("b"),
         )
         .select("media_id", "b.band_idx", "b.band_val")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     a = bands.alias("a")
     c = bands.alias("c")

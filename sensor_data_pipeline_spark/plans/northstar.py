@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from sensor_data_pipeline_spark.functions.text import (
     doc_fingerprint,
     mean_token_len,
-    punct_count,
     quality_score,
     stopword_count,
     token_count,
@@ -36,6 +35,7 @@ from sensor_data_pipeline_spark.operators.similarity import (
     ivf_topk,
     lsh_bucket_topk,
 )
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -497,7 +497,7 @@ def q74_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the embedding near-dup pair graph —
     the keep-one clustering step after candidate generation. Spark runs
     distributed min-label propagation (one shuffle per round,
-    localCheckpoint-truncated lineage, operators/dedup.py
+    pin-truncated lineage, operators/dedup.py
     dedup_components); the oracle computes the same transitive closure
     with a recursive CTE."""
     emb = load_table(spark, "embeddings", sf_dir)
@@ -1079,7 +1079,7 @@ def q364_banding_containment_calibration(spark: SparkSession, sf_dir: str) -> Da
     samp = (
         emb.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(_CALIBRATION_K)
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     banded = embedding_neardup_pairs(
         samp, threshold=0.4, band_bits=None, sizing_df=emb
@@ -1188,7 +1188,7 @@ def q198_token_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a co-occurrence build needs anyway)
     dt = d.select(
         "doc_id", F.explode(F.array_distinct(tokenize(F.col("text")))).alias("token")
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     top = (
         dt.groupBy("token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
@@ -1401,7 +1401,7 @@ def q221_bpe_merge_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
     chars = F.filter(F.split("word", ""), lambda c: c != "")
     spaced = words.select(
         F.concat(F.lit(" "), F.concat_ws(" ", chars), F.lit(" ")).alias("s"), "n"
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     # ^ the docstring's "corpus is never rescanned after the word count"
     # only holds if the vocabulary frame is PINNED: unpinned, every
     # step's lineage re-derived it from the parquet scan (7 documents
@@ -1445,7 +1445,7 @@ def q221_bpe_merge_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("replace(s, concat(' ', _bp, ' '), concat(' ', replace(_bp, ' ', ''), ' '))").alias("s"),
                 "n",
             )
-            .localCheckpoint(eager=True)  # per-step pin: keeps lineage O(1)
+            .transform(pin)  # per-step pin: keeps lineage O(1)
         )
     out = bests[0]
     for b in bests[1:]:
@@ -1593,7 +1593,6 @@ def q281_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q297 — sorted-neighborhood near-dup blocking (SNM)
 # ---------------------------------------------------------------------------
 
-_SNM_W = 2  # compare each doc with its next 2 sorted neighbors
 _SNM_JAC_PPM = 300000  # 0.30 Jaccard floor
 
 

@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 
 from sensor_data_pipeline_spark.functions.text import tokenize, word_hash32
 from sensor_data_pipeline_spark.operators.prefix import global_running_sum
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -178,7 +179,7 @@ def q159_ngram_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-tokenized the corpus (4 documents scans in the r5 plan)
     tok = d.select(
         "doc_id", "lang", F.explode(tokenize(F.col("text"))).alias("w")
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     bg = tok.groupBy("w").agg(F.count(F.lit(1)).alias("cb"))
     tgt = tok.filter(F.col("lang") == "en").groupBy("w").agg(F.count(F.lit(1)).alias("ct"))
     consts = tok.agg(
@@ -407,7 +408,7 @@ def q165_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
         d.groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_orig"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     t = c.agg(F.sum("n_orig").alias("total"), F.count(F.lit(1)).alias("ns"))
     r = (
@@ -419,7 +420,7 @@ def q165_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(1.0), (F.col("total") / F.col("ns").cast("double")) / F.col("n_orig")
             ).alias("rate"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     u = word_hash32(F.col("doc_id").cast("string"), seed=13) / F.lit(4294967296.0)
     s = (
@@ -573,7 +574,7 @@ def q167_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     that exact all-pairs is an audit path, not a production path, and —
     worse — re-derived the O(n²·dim) blocked product FOUR times
     (p1/p2/p3 + the count, 6 embeddings scans, no pin). Now the edge
-    list is banded AND ``localCheckpoint(eager=True)``-pinned: one
+    list is banded AND pinned: one
     candidate-generation pass total, and the triangle join reads the
     pinned ~edge-sized frame. The oracle replays the band-agreement
     predicate as a pure boolean over the raw float32 signs (the q150
@@ -588,7 +589,7 @@ def q167_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         embedding_neardup_pairs(emb, threshold=0.4)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     p1 = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     p2 = pairs.select(F.col("id_a").alias("b2"), F.col("id_b").alias("c"))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import REGISTRY, register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -473,12 +474,12 @@ def q15_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = (
         o.filter(F.col("o_totalprice") > 300000)
         .select(F.col("o_custkey").alias("custkey"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     fbuy = (
         o.filter(F.col("o_orderstatus") == "F")
         .select(F.col("o_custkey").alias("custkey"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     both = big.intersect(fbuy).withColumn("tag", F.lit("both"))
     big_only = big.subtract(fbuy).withColumn("tag", F.lit("big_only"))

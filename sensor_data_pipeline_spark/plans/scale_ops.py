@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 from sensor_data_pipeline_spark.functions.text import tokenize
 from sensor_data_pipeline_spark.operators.filters import bloom_bitmap, bloom_contains
 from sensor_data_pipeline_spark.operators.skyline import pareto_frontier_2d
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -1343,7 +1344,7 @@ def q277_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("user_id") * 100000 + day).alias("e"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     hashed = pairs.select(
         "s", (((F.col("e") % F.lit(2147483648)) * F.lit(2654435761)) % F.lit(2147483648)).alias("h")
@@ -1353,7 +1354,7 @@ def q277_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed.withColumn("rn", F.row_number().over(wg))
         .filter(F.col("rn") <= 64)
         .select("s", "h")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     wu = Window.orderBy("h")
     kset = (

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sensor_data_pipeline_spark.pins import pin
 from sensor_data_pipeline_spark.plans.registry import register
 from sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -231,7 +232,7 @@ def q92_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     s2 = (
         e.filter(F.col("event_type") == "view")
@@ -239,7 +240,7 @@ def q92_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     s3 = (
         e.filter(F.col("event_type") == "purchase")
@@ -600,7 +601,7 @@ def q322_erasure_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id")
         .distinct()
         .withColumn("_hit", F.lit(1))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
 
     # hit + total fuse into ONE scan per table: a marked LEFT join
@@ -627,7 +628,7 @@ def q322_erasure_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(erased, o["o_custkey"] == erased["user_id"], "left_semi")
         .select(F.col("o_orderkey").alias("user_id"))
         .withColumn("_hit", F.lit(1))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     li_row = (
         li.select(F.col("l_orderkey").alias("_k"))

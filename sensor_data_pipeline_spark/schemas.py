@@ -49,57 +49,6 @@ MQTT_MESSAGE = T.StructType(
     ]
 )
 
-#: HKO rhrread response document (reference src/modules/hko/hko.cpp:100-118):
-#: nested struct with an array of {place, value, unit} observations.
-HKO_RESPONSE = T.StructType(
-    [
-        T.StructField(
-            "temperature",
-            T.StructType(
-                [
-                    T.StructField("recordTime", T.StringType()),
-                    T.StructField(
-                        "data",
-                        T.ArrayType(
-                            T.StructType(
-                                [
-                                    T.StructField("place", T.StringType()),
-                                    T.StructField("value", T.DoubleType()),
-                                    T.StructField("unit", T.StringType()),
-                                ]
-                            )
-                        ),
-                    ),
-                ]
-            ),
-        )
-    ]
-)
-
-#: UPS telemetry row (reference src/modules/module_rpi_ups_hat.c:59-73):
-#: physical units after register decode.
-UPS_TELEMETRY = T.StructType(
-    [
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("bus_voltage", T.DoubleType()),
-        T.StructField("shunt_voltage", T.DoubleType()),
-        T.StructField("current", T.DoubleType()),
-        T.StructField("power", T.DoubleType()),
-    ]
-)
-
-#: raw-register variant before decode (uint16 registers; two's-complement
-#: + shift/scale decode reference src/modules/module_rpi_ups_hat.c:130-180)
-UPS_REGISTERS = T.StructType(
-    [
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("reg_bus", T.IntegerType()),
-        T.StructField("reg_shunt", T.IntegerType()),
-        T.StructField("reg_current", T.IntegerType()),
-        T.StructField("reg_power", T.IntegerType()),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Testdata tables (TESTDATA.md; types read from the sf0.001 parquet files)
 # ---------------------------------------------------------------------------
@@ -201,8 +150,6 @@ TESTDATA_TABLES: dict[str, T.StructType] = {
 #: sentinel for missing/stale readings (reference
 #: src/modules/dd/consumer.cpp:124-131; producer init :217-219)
 SENTINEL_MISSING = 888.8
-#: sensor-failure sentinel, deci-°C (reference src/modules/ch/ch.c:181,197)
-SENTINEL_FAILURE = 999
 #: staleness tolerance in seconds (reference src/modules/dd/consumer.cpp:251)
 STALENESS_TOLERANCE_SEC = 3600
 #: ISO-8601 wire format (reference src/modules/dd/producer.c:131-134)

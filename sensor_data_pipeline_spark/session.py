@@ -40,7 +40,6 @@ every knob matters at cluster scale:
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -48,44 +47,6 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 #: the package is not installed; Python workers import it from here
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-@contextmanager
-def composed_pins(spark: SparkSession):
-    """Build scope that makes ``localCheckpoint(eager=False)`` pins
-    actually lazy.
-
-    Under AQE, ``Dataset.localCheckpoint`` resolves the RDD through
-    ``AdaptiveSparkPlanExec``, which materializes EVERY adaptive query
-    stage synchronously — so each "lazy" pin is a driver-blocking job
-    at BUILD time (measured on q302: 11.9s in ``spec.spark(...)``,
-    0.15s in the subsequent collect; the r11 eager→lazy flips never
-    composed anything). Disabling AQE inside this scope makes the pins
-    plan statically (at the session's shuffle-partition count), so the
-    whole pin chain executes as ONE composed action on first
-    consumption with its stages pipelined (guide §2.6). The CONSUMER's
-    plan is finalized at action time, outside the scope, and keeps AQE
-    (skew-join handling, partition coalescing, runtime broadcast).
-
-    Adopt per query by interleaved same-session measurement, not by
-    default: q335 (-27%) and q236 (-15%) win — their pins are
-    corpus-pass maps whose static 32-partition stages pipeline well;
-    q332 / q269 / q226 LOSE (their pin stages profit from AQE's
-    runtime broadcast conversion and coalescing) and stay unscoped.
-
-    Contract for scoped LAZY pins: every consumer must fully
-    materialize all partitions (collect/toPandas/noop write). A
-    partial consumer (limit/take) would silently trigger
-    LocalRDDCheckpointData's end-of-job fill-in job — correct output,
-    hidden re-execution. tests/test_plan_shapes.py::
-    test_lazy_pin_consumers_materialize_fully enforces it.
-    """
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def _resolve_aqe_floor(resolved_master: str) -> str | None:

@@ -65,6 +65,19 @@ SESSION_STATE = StructType(
 )
 
 
+def _batch_rows(pdfs: Iterator[pd.DataFrame], by: str | list[str]) -> pd.DataFrame:
+    """All of one key's rows in this micro-batch, in ``by`` order: the
+    non-empty Arrow chunks concatenated, then ONE stable sort.
+    applyInPandasWithState hands a key's rows over in chunks of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows with no order
+    across chunks, so sorting chunk by chunk would run a per-key
+    recursion out of order whenever a later chunk holds earlier rows."""
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:
+        return pd.DataFrame()
+    return pd.concat(chunks, ignore_index=True).sort_values(by, kind="mergesort").reset_index(drop=True)
+
+
 def _sign(v: float) -> int:
     return 1 if v > 0 else (-1 if v < 0 else 0)
 
@@ -77,21 +90,19 @@ def _sessionize_group(
     rate = (pct0 - pct) / (t - t0 + 1); eta = pct/rate or NA
     (module_rpi_ups_hat.c:200-219, 253-258)."""
     last_sign, session_id, t0, pct0 = state.get if state.exists else (None, 0, 0, 0.0)
-    for pdf in pdfs:
-        pdf = pdf.sort_values("tick_ts")
-        out_rows = []
-        for row in pdf.itertuples(index=False):
-            cur = float(row.signal)
-            epoch = int(pd.Timestamp(row.tick_ts).timestamp())
-            pct = float(row.pct)
-            if last_sign is None or last_sign * _sign(cur) <= 0:
-                session_id += 1
-                t0, pct0 = epoch, pct
-            last_sign = _sign(cur)
-            rate = (pct0 - pct) / (epoch - t0 + 1)
-            eta = pct / rate if rate != 0 else None
-            out_rows.append((key[0], row.tick_ts, cur, pct, session_id, rate, eta))
-        yield pd.DataFrame(out_rows, columns=[f.name for f in SESSION_OUTPUT.fields])
+    out_rows = []
+    for row in _batch_rows(pdfs, "tick_ts").itertuples(index=False):
+        cur = float(row.signal)
+        epoch = int(pd.Timestamp(row.tick_ts).timestamp())
+        pct = float(row.pct)
+        if last_sign is None or last_sign * _sign(cur) <= 0:
+            session_id += 1
+            t0, pct0 = epoch, pct
+        last_sign = _sign(cur)
+        rate = (pct0 - pct) / (epoch - t0 + 1)
+        eta = pct / rate if rate != 0 else None
+        out_rows.append((key[0], row.tick_ts, cur, pct, session_id, rate, eta))
+    yield pd.DataFrame(out_rows, columns=[f.name for f in SESSION_OUTPUT.fields])
     state.update((last_sign, session_id, t0, pct0))
 
 
@@ -210,15 +221,13 @@ def _ewma_group(
         s, init = state.get
     else:
         s, init = 0.0, 0
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["tick_ts", "event_id"])
-        out = []
-        for row in pdf.itertuples(index=False):
-            x = float(row.x)
-            s = x / 2 if not init else (s + x) / 2
-            init = 1
-            out.append((key[0], int(row.event_id), s))
-        yield pd.DataFrame(out, columns=[f.name for f in EWMA_OUTPUT.fields])
+    out = []
+    for row in _batch_rows(pdfs, ["tick_ts", "event_id"]).itertuples(index=False):
+        x = float(row.x)
+        s = x / 2 if not init else (s + x) / 2
+        init = 1
+        out.append((key[0], int(row.event_id), s))
+    yield pd.DataFrame(out, columns=[f.name for f in EWMA_OUTPUT.fields])
     state.update((s, init))
 
 
@@ -278,19 +287,8 @@ def _token_bucket_group(
         last_es, tokens, init = state.get
     else:
         last_es, tokens, init = 0, BUCKET_CAP, 0
-    # ONE per-group sort over ALL Arrow chunks: applyInPandasWithState
-    # may split a key's micro-batch rows across several chunks with no
-    # cross-chunk ordering guarantee, so per-chunk sorting would
-    # interleave wrongly whenever a later chunk holds earlier rows
-    # (same lesson as _delta_group below).
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    rows = (
-        pd.concat(chunks, ignore_index=True).sort_values(["tick_ts", "event_id"])
-        if chunks
-        else pd.DataFrame()
-    )
     out = []
-    for row in rows.itertuples(index=False):
+    for row in _batch_rows(pdfs, ["tick_ts", "event_id"]).itertuples(index=False):
         es = int(row.tick_ts.value // 1_000_000_000)  # ns -> whole seconds
         if init:
             # clamp the refill delta at 0: an event arriving in a later
@@ -342,18 +340,11 @@ def _delta_group(
 ) -> Iterator[pd.DataFrame]:
     """Per-key previous-value memory: each row's delta from the
     immediately preceding row of the same key (null for the key's
-    first row ever), across micro-batch boundaries. A key's rows can
-    arrive as several Arrow chunks in arbitrary order, so they are
-    concatenated and sorted once before the diff."""
+    first row ever), across micro-batch boundaries."""
     prev = state.get[0] if state.exists else None
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if not chunks:
+    out = _batch_rows(pdfs, "tick_ts")
+    if out.empty:
         return
-    out = (
-        pd.concat(chunks, ignore_index=True)
-        .sort_values("tick_ts", kind="mergesort")
-        .reset_index(drop=True)
-    )
     deltas = out["value"].diff()
     if prev is not None:
         deltas.iloc[0] = out["value"].iloc[0] - prev

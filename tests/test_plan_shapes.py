@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -330,9 +329,8 @@ def test_median_twopass_no_data_sized_sort(spark):
     from sensor_data_pipeline_spark.plans.pipeline_v2 import q178_median_twopass
 
     plan = plan_of(q178_median_twopass(spark, SF))
-    # the prefix scan's range exchange runs inside the eager
-    # localCheckpoint (round-4: persist() -> localCheckpoint so pinned
-    # blocks are GC-released and can't silently re-sample), so the
+    # the prefix scan's range exchange runs inside the eager pin
+    # (pinned blocks are GC-released and can't silently re-sample), so the
     # downstream plan reads the checkpointed frame — the frozen _pid
     # column in the ExistingRDD scan IS the evidence the partitioning
     # happened exactly once; partial_count proves the value histogram
@@ -523,30 +521,14 @@ def test_bm25_takeordered_and_broadcasts(spark):
 
 
 def test_semdedup_pairs_only_within_clusters(spark):
-    from unittest.mock import patch
-
-    dfmod = pytest.importorskip(
-        "pyspark.sql.classic.dataframe",
-        reason="pin capture patches the Spark-4 classic (non-Connect) DataFrame",
-    )
-
+    from sensor_data_pipeline_spark.pins import observing
     from sensor_data_pipeline_spark.plans.curation import q226_semdedup
 
-    # r11: the multi-consumer frames (qz / centcell / assign / side) are
-    # localCheckpoint-pinned, so the argmin trees execute inside the pin
-    # builds — capture those plans the way tools/plan_summary.py does,
-    # and assert the shape properties across final plan + every pin.
-    # patch.object as a context manager (ADVICE r11): the class method
-    # is restored even if the build raises, and the patch is visibly
-    # scoped to the one build.
+    # the multi-consumer frames (qz / centcell / assign / side) are
+    # pinned, so the argmin trees execute inside the pin builds: assert
+    # the shape properties across the final plan and every pin build
     pin_plans: list[str] = []
-    orig = dfmod.DataFrame.localCheckpoint
-
-    def capturing(df_self, *args, **kwargs):
-        pin_plans.append(df_self._jdf.queryExecution().executedPlan().toString())
-        return orig(df_self, *args, **kwargs)
-
-    with patch.object(dfmod.DataFrame, "localCheckpoint", capturing):
+    with observing(lambda df, lazy: pin_plans.append(plan_of(df))):
         plan = plan_of(q226_semdedup(spark, SF))
     # the only nested-loop is against broadcast (centroids / k scalar);
     # the pair join itself is hash-keyed on the cluster id
@@ -557,43 +539,6 @@ def test_semdedup_pairs_only_within_clusters(spark):
     assert any("partial_min" in p for p in pin_plans)
     # the pair join reads the pinned side table, not a recomputed tree
     assert "Scan ExistingRDD" in plan
-
-
-# Queries carrying a lazy localCheckpoint pin (eager=False). Their
-# correctness does not depend on this list, but their PERFORMANCE
-# contract does: a lazy pin fills inside the consuming action, and a
-# partial consumer (limit/take — LocalLimit stops each partition
-# early) would silently trigger LocalRDDCheckpointData's end-of-job
-# fill-in job, re-running the pin build after the query "finished"
-# (ADVICE r11). Every consumer below must therefore fully materialize:
-# the final plan may not contain a limit-class node.
-# (TakeOrderedAndProject is fine — per-partition top-k reads every
-# row — and is asserted present for q223 above; plain CollectLimit /
-# GlobalLimit are the hazard.)
-_LAZY_PIN_QUERIES = [
-    "q235_equidepth_histogram",
-    "q236_span_dedup_audit",
-    "q269_bfs_khop",
-    "q302_bellman_ford",
-    "q326_prefix_filter_simjoin",
-    "q332_weighted_minhash_lsh",
-    "q335_rouge_candidate_f1",
-    "q336_matryoshka_recall",
-    "q344_decontamination_curve",
-]
-
-
-def test_lazy_pin_consumers_materialize_fully(spark):
-    from sensor_data_pipeline_spark.plans import REGISTRY
-
-    for name in _LAZY_PIN_QUERIES:
-        plan = plan_of(REGISTRY[name].spark(spark, SF))
-        for node in ("CollectLimit", "GlobalLimit", "LocalLimit"):
-            assert node not in plan, (
-                f"{name}: {node} consumer over a lazy localCheckpoint pin "
-                "— partial materialization triggers the end-of-job "
-                "fill-in job; make the pin eager or drop the limit"
-            )
 
 
 def test_span_dedup_no_global_window(spark):
@@ -613,7 +558,7 @@ def test_equidepth_uses_distributed_scan_not_global_window(spark):
 
     plan = plan_of(q235_equidepth_histogram(spark, SF))
     # the rank comes from the two-pass prefix scan: the range exchange
-    # runs inside the eager localCheckpoint (frozen _pid in the
+    # runs inside the eager pin (frozen _pid in the
     # ExistingRDD scan), then pid-keyed window + broadcast offsets join
     assert "Scan ExistingRDD" in plan and "_pid" in plan
     assert "BroadcastHashJoin" in plan
@@ -715,7 +660,7 @@ def test_peak_concurrency_distributed_sweep(spark):
 
     plan = plan_of(q266_peak_concurrency(spark, SF))
     # the sweep's running sum runs on the two-pass prefix scan (frozen
-    # _pid inside the eager localCheckpoint), never a global window
+    # _pid inside the eager pin), never a global window
     # over a single partition of raw boundaries
     assert "Scan ExistingRDD" in plan and "_pid" in plan
     # (the boundary groupBy's partial aggregation runs INSIDE the
@@ -752,8 +697,7 @@ def test_bfs_khop_unrolled_single_dag(spark):
     from sensor_data_pipeline_spark.plans.iterative import q269_bfs_khop
 
     plan = plan_of(q269_bfs_khop(spark, SF))
-    # the hop loop materializes per-superstep (localCheckpoint, lazy
-    # since r11: each distance table feeds both the next frontier
+    # the hop loop materializes per-superstep (a lazy pin: each distance table feeds both the next frontier
     # filter and the min-union, so an unpinned plan doubles per hop) —
     # the final plan therefore reads the checkpointed frontier, and
     # the layer rollup combines map-side
@@ -1045,7 +989,7 @@ def test_mutual_information_single_scan_pinned_joint(spark):
     from sensor_data_pipeline_spark.plans.inference import q296_mutual_information
 
     plan = plan_of(q296_mutual_information(spark, SF))
-    # the joint histogram is localCheckpoint-pinned: marginals, total and
+    # the joint histogram is pinned: marginals, total and
     # level counts all read the tiny pinned frame — events is scanned ONCE
     # (at checkpoint time), never re-scanned per consumer
     assert "Scan parquet" not in plan
@@ -1197,7 +1141,7 @@ def test_rfm_ntile_is_distributed(spark):
 
     plan = plan_of(q318_rfm_segmentation(spark, SF))
     assert "ntile(" not in plan, plan
-    # the localCheckpoint pins show up as ExistingRDD scans
+    # the pins show up as ExistingRDD scans
     assert "Scan ExistingRDD" in plan, plan
 
 
@@ -1209,7 +1153,7 @@ def test_prefix_filter_join_no_cartesian(spark):
     plan = plan_of(q326_prefix_filter_simjoin(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "Scan ExistingRDD" in plan  # localCheckpoint pin of tok
+    assert "Scan ExistingRDD" in plan  # pin of tok
 
 
 def test_snapshot_dedup_single_fp_join(spark):
@@ -1277,7 +1221,9 @@ def test_plan_audit_and_digest_regressions(spark):
        query whose plan got worse than the committed baseline (a table
        scanned more often, more python ops, more exchanges, a
        cartesian appearing) fails even if it stays under the absolute
-       thresholds — so a deleted localCheckpoint can't land silently.
+       thresholds — so a deleted pin can't land silently. A lazy
+       pin under a limit-style consumer is its own never-allowed
+       finding (`lazy_pin_partial_consumer`).
        Seeded-mutant check: removing q167's pairs pin flips its
        embeddings scans 1 -> >1 and this test fails. After an
        intentional plan improvement, regenerate the baseline with
@@ -1470,15 +1416,16 @@ def test_ivf_curve_single_pinned_scan(spark):
 
 def test_pin_capture_counts_persist_inside_pin(spark):
     """Round-7 review finding: a persist() consumed only INSIDE a
-    localCheckpoint build appears in neither the final plan (whose
+    pin build appears in neither the final plan (whose
     leaf is the pin's ExistingRDD) nor the pin plan's parquet leaves
     (whose leaf is the InMemoryTableScan) — the capture must walk the
     cached relation's build plan too, or a 2x rescan hidden behind
     persist-then-pin commits scans={} and dodges the audit."""
     from pyspark.sql import functions as F2
 
+    from sensor_data_pipeline_spark.pins import pin
     from sensor_data_pipeline_spark.sources.tables import load_table
-    from tools.plan_summary import _PinCapture, combined_scans
+    from tools.plan_summary import combined_scans, digest_full
 
     def build():
         cached = load_table(spark, "nation", SF).select("n_nationkey", "n_name").persist()
@@ -1488,12 +1435,11 @@ def test_pin_capture_counts_persist_inside_pin(spark):
                 F2.col("n_nationkey") == F2.col("k2"),
             )
             .select("n_nationkey", "n_name")
-            .localCheckpoint(eager=True)
+            .transform(pin)
         )
         return pinned.groupBy("n_name").count()
 
-    with _PinCapture() as cap:
-        d = cap.digest_full(build)
+    d = digest_full(build)
     # the final plan reads only the pin; the persist's parquet scan is
     # visible ONLY through the cache walk inside the pin capture
     assert d["scans"] == {}, d["scans"]
@@ -1536,11 +1482,9 @@ def test_zipf_octave_window_bounded(spark):
     input path; documents is physically read exactly once (inside the
     pin build — both the total and the profile read the pin)."""
     from sensor_data_pipeline_spark.plans.frontier3 import q349_zipf_octave_profile
-    from tools.plan_summary import _PinCapture, combined_scans
+    from tools.plan_summary import combined_scans, digest_full
 
-    cap = _PinCapture()
-    with cap:
-        d = cap.digest_full(lambda: q349_zipf_octave_profile(spark, SF))
+    d = digest_full(lambda: q349_zipf_octave_profile(spark, SF))
     assert combined_scans(d).get("documents", 0) == 1, combined_scans(d)
     assert d["scans"] == {}, d["scans"]  # final plan reads only the pin
     assert d["global_window"] is True and d["global_windows_unbounded"] == 0
@@ -1551,11 +1495,9 @@ def test_kanonymity_ladder_rides_broadcast(spark):
     aggregation), never row-scale data, and rides a broadcast;
     customer is physically read exactly once (inside the pin)."""
     from sensor_data_pipeline_spark.plans.frontier3 import q350_kanonymity_audit
-    from tools.plan_summary import _PinCapture, combined_scans
+    from tools.plan_summary import combined_scans, digest_full
 
-    cap = _PinCapture()
-    with cap:
-        d = cap.digest_full(lambda: q350_kanonymity_audit(spark, SF))
+    d = digest_full(lambda: q350_kanonymity_audit(spark, SF))
     assert combined_scans(d).get("customer", 0) == 1, combined_scans(d)
     assert d["scans"] == {}, d["scans"]
     assert d["broadcasts"] >= 1
@@ -1592,11 +1534,9 @@ def test_oov_stat_pinned_vocab_broadcast(spark):
     tokenizes exactly once — both the vocab top-K and the roll-up read
     the pin) and the 16-row vocabulary rides a broadcast join."""
     from sensor_data_pipeline_spark.plans.frontier3 import q354_oov_rate_audit
-    from tools.plan_summary import _PinCapture, combined_scans
+    from tools.plan_summary import combined_scans, digest_full
 
-    cap = _PinCapture()
-    with cap:
-        d = cap.digest_full(lambda: q354_oov_rate_audit(spark, SF))
+    d = digest_full(lambda: q354_oov_rate_audit(spark, SF))
     total = combined_scans(d)
     assert total.get("documents", 0) == 1, total  # one physical read, inside the pin
     assert d["scans"] == {}, d["scans"]  # final plan reads only the pin
@@ -1609,11 +1549,9 @@ def test_split_chisq_predicate_pushdown(spark):
     the totals and the chi-square both read the pin), no sort-merge
     join, and the totals ride a broadcast."""
     from sensor_data_pipeline_spark.plans.frontier3 import q355_split_balance_chisq
-    from tools.plan_summary import _PinCapture, combined_scans
+    from tools.plan_summary import combined_scans, digest_full
 
-    cap = _PinCapture()
-    with cap:
-        d = cap.digest_full(lambda: q355_split_balance_chisq(spark, SF))
+    d = digest_full(lambda: q355_split_balance_chisq(spark, SF))
     assert combined_scans(d).get("documents", 0) == 1, combined_scans(d)
     assert d["scans"] == {}, d["scans"]
     assert d["broadcasts"] >= 1
@@ -1625,11 +1563,9 @@ def test_epoch_budget_panel_pinned(spark):
     per-source arithmetic both read it) — one physical documents
     read, inside the pin."""
     from sensor_data_pipeline_spark.plans.frontier3 import q352_epoch_repeat_budget
-    from tools.plan_summary import _PinCapture, combined_scans
+    from tools.plan_summary import combined_scans, digest_full
 
-    cap = _PinCapture()
-    with cap:
-        d = cap.digest_full(lambda: q352_epoch_repeat_budget(spark, SF))
+    d = digest_full(lambda: q352_epoch_repeat_budget(spark, SF))
     assert combined_scans(d).get("documents", 0) == 1, combined_scans(d)
     assert d["scans"] == {}, d["scans"]
     assert d["broadcasts"] >= 1
@@ -1640,11 +1576,9 @@ def test_s_curve_pair_space_is_banded(spark):
     no cartesian, no nested-loop join; the signature table is cached
     (three consumers) so documents is physically read once."""
     from sensor_data_pipeline_spark.plans.frontier3 import q356_lsh_s_curve_audit
-    from tools.plan_summary import _PinCapture, combined_scans
+    from tools.plan_summary import combined_scans, digest_full
 
-    cap = _PinCapture()
-    with cap:
-        d = cap.digest_full(lambda: q356_lsh_s_curve_audit(spark, SF))
+    d = digest_full(lambda: q356_lsh_s_curve_audit(spark, SF))
     assert d["cartesian"] is False
     assert combined_scans(d).get("documents", 0) <= 1, combined_scans(d)
 
@@ -1654,11 +1588,9 @@ def test_tv_divergence_tokenizes_once(spark):
     — the corpus tokenizes exactly once; the census join runs on the
     token key, never a cartesian."""
     from sensor_data_pipeline_spark.plans.frontier3 import q357_source_tv_divergence
-    from tools.plan_summary import _PinCapture, combined_scans
+    from tools.plan_summary import combined_scans, digest_full
 
-    cap = _PinCapture()
-    with cap:
-        d = cap.digest_full(lambda: q357_source_tv_divergence(spark, SF))
+    d = digest_full(lambda: q357_source_tv_divergence(spark, SF))
     assert combined_scans(d).get("documents", 0) == 1, combined_scans(d)
     assert d["scans"] == {}, d["scans"]
     assert d["cartesian"] is False

@@ -2,7 +2,7 @@
 no Spark session, so the gate semantics themselves are guarded cheaply:
 
 - the regression gate must catch a seeded mutant (a removed
-  localCheckpoint shows up as a scan-count increase vs the committed
+  pin shows up as a scan-count increase vs the committed
   baseline),
 - ALLOW matching must be exact on the full reason string (round-5
   ADVICE: prefix matching would let `rescan:documentsx8` ride an
@@ -34,7 +34,7 @@ def _digest(**kw):
 
 
 def test_seeded_mutant_scan_increase_fails_regression_gate():
-    # the q167 mutant: deleting the pairs localCheckpoint turns 1
+    # the q167 mutant: deleting the pairs pin turns 1
     # embeddings scan into 6 — must be flagged even though other
     # counters improve
     baseline = {"q167": _digest(scans={"embeddings": 1}, pins=3)}
@@ -117,11 +117,25 @@ def test_unbounded_global_window_is_its_own_reason():
 def test_allow_list_never_admits_unbounded_global_windows():
     # the ALLOW contract: `global_window` entries are admissible ONLY
     # because the digest machine-checked a bound on every input path;
-    # nothing in the committed ALLOW may name the unbounded reason
-    from tools.plan_audit import ALLOW
+    # nothing in the committed ALLOW may name the unbounded reason, and
+    # an ALLOW entry naming a NEVER_ALLOWED reason excuses nothing
+    from tools.plan_audit import ALLOW, NEVER_ALLOWED
 
     for name, reasons in ALLOW.items():
-        assert "global_window_unbounded" not in reasons, name
+        assert not reasons & NEVER_ALLOWED, name
+    for reason in NEVER_ALLOWED:
+        assert unexplained_findings({"q": [reason]}, {"q": {reason}}) == {"q": [reason]}
+
+
+def test_lazy_pin_under_partial_limit_is_a_finding():
+    # a lazy pin fills inside its consuming action; a limit-style
+    # consumer may stop early and trigger the end-of-job fill-in job
+    # that re-runs the build. A top-k (TakeOrderedAndProject) reads
+    # every row and is not partial; an eager pin is already filled.
+    bad = "lazy_pin_partial_consumer"
+    assert bad in findings_from_digest(_digest(lazy_pins=2, partial_limit=True))
+    assert bad not in findings_from_digest(_digest(lazy_pins=2, partial_limit=False))
+    assert bad not in findings_from_digest(_digest(lazy_pins=0, partial_limit=True))
 
 
 def test_pin_hidden_rowwise_python_triggers_absolute_python_udf():
@@ -157,12 +171,13 @@ def test_live_mutant_rescan_hidden_inside_pin_fails_gate(spark):
     """Round-7 VERDICT item 7: the pin-capture tests proved capture
     WORKS; this mutant proves the gate FAILS when it matters. The
     mutant hides a (RESCAN_MAX+1)-way self-union of nation inside a
-    localCheckpoint build — the final plan's only leaf is the pin's
+    pin build — the final plan's only leaf is the pin's
     ExistingRDD, so a capture-blind audit would commit scans={} and
     pass. The combined digest must produce an unexplained rescan
     finding."""
+    from sensor_data_pipeline_spark.pins import pin
     from sensor_data_pipeline_spark.sources.tables import load_table
-    from tools.plan_summary import _PinCapture
+    from tools.plan_summary import digest_full
 
     sf = "/root/testdata/sf0.001"
 
@@ -171,11 +186,10 @@ def test_live_mutant_rescan_hidden_inside_pin_fails_gate(spark):
         u = n
         for _ in range(RESCAN_MAX):  # RESCAN_MAX+1 parquet scans total
             u = u.unionByName(load_table(spark, "nation", sf).select("n_nationkey", "n_name"))
-        pinned = u.localCheckpoint(eager=True)
+        pinned = pin(u)
         return pinned.groupBy("n_name").count()
 
-    with _PinCapture() as cap:
-        d = cap.digest_full(build)
+    d = digest_full(build)
     assert d["scans"] == {}, d["scans"]  # the blindness being seeded
     findings = findings_from_digest(d)
     assert f"rescan:nationx{RESCAN_MAX + 1}" in findings, (findings, d)
@@ -185,25 +199,25 @@ def test_live_mutant_rescan_hidden_inside_pin_fails_gate(spark):
 
 def test_live_mutant_rowwise_udf_hidden_inside_pin_fails_gate(spark):
     """Round-7 ADVICE, end-to-end: a row-at-a-time Python UDF executed
-    only INSIDE a localCheckpoint build never appears in the final plan
+    only INSIDE a pin build never appears in the final plan
     (whose leaf is the pin). digest_full must surface it as
     pin_python_rowwise and the absolute audit must emit python_udf."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
+    from sensor_data_pipeline_spark.pins import pin
     from sensor_data_pipeline_spark.sources.tables import load_table
-    from tools.plan_summary import _PinCapture
+    from tools.plan_summary import digest_full
 
     sf = "/root/testdata/sf0.001"
     slow = F.udf(lambda x: int(x) * 2, LongType(), useArrow=False)
 
     def build():
         n = load_table(spark, "nation", sf).select("n_nationkey")
-        pinned = n.withColumn("d", slow("n_nationkey")).localCheckpoint(eager=True)
+        pinned = pin(n.withColumn("d", slow("n_nationkey")))
         return pinned.groupBy().sum("d")
 
-    with _PinCapture() as cap:
-        d = cap.digest_full(build)
+    d = digest_full(build)
     assert d["python_rowwise"] == 0, d  # final plan is clean: that is the trap
     assert d["pin_python_rowwise"] >= 1, d
     assert "python_udf" in findings_from_digest(d)

@@ -307,6 +307,54 @@ def test_sessionize_state_survives_micro_batches(spark, tmp_path):
     assert abs(out[3].eta_sec - 97.0 / 0.5) < 1e-9
 
 
+@pytest.fixture
+def small_arrow_chunks(spark):
+    """Arrow chunks of 4 rows, so one key's micro-batch spans several
+    chunks handed to the group function in input order."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "4")
+    yield
+    spark.conf.set(conf, prev)
+
+
+def _shuffled(rows):
+    import random
+
+    rows = list(rows)
+    random.Random(7).shuffle(rows)
+    return rows
+
+
+def test_sessionize_stream_orders_rows_across_arrow_chunks(spark, stream_dir, small_arrow_chunks):
+    """One key, 40 shuffled ticks in ONE micro-batch, 4-row Arrow
+    chunks: session numbering must follow tick order over the whole
+    batch, not within each chunk."""
+    schema = "k string, tick_ts timestamp, signal double, pct double"
+    signals = [(-1.0) ** (i // 3) * (i + 1) for i in range(40)]  # sign flips every 3 ticks
+    rows = [("u", ts(f"2024-01-01 00:{i // 60:02d}:{i % 60:02d}"), v, 100.0 - i) for i, v in enumerate(signals)]
+    df = spark.createDataFrame(_shuffled(rows), schema).coalesce(1)
+    out = drain(sessionize_stream(stream_dir(df, df.schema)), "sessions_chunks").orderBy("tick_ts").collect()
+    assert [r.session_id for r in out] == [i // 3 + 1 for i in range(40)]
+
+
+def test_ewma_stream_orders_rows_across_arrow_chunks(spark, stream_dir, small_arrow_chunks):
+    """The recursive EWMA over one key's 40 shuffled rows in ONE
+    micro-batch, 4-row Arrow chunks, equals the sequential recursion
+    in (tick_ts, event_id) order."""
+    from sensor_data_pipeline_spark.streaming.stateful import ewma_stream
+
+    schema = "k string, tick_ts timestamp, event_id bigint, x double"
+    rows = [("u", ts(f"2024-01-01 00:00:{i // 2:02d}"), i, float((i * 37) % 11)) for i in range(40)]
+    df = spark.createDataFrame(_shuffled(rows), schema).coalesce(1)
+    got = {r.event_id: r.ewma for r in drain(ewma_stream(stream_dir(df, df.schema)), "ewma_chunks").collect()}
+    want, s = {}, None
+    for _, _, eid, x in rows:
+        s = x / 2 if s is None else (s + x) / 2
+        want[eid] = s
+    assert got == want
+
+
 def test_cdc_apply_stream_versioned_exactly_once(spark, tmp_path):
     """Streaming MERGE apply (q90's continuous twin): per-epoch
     immutable snapshot versions + checkpointed offsets = exactly-once.

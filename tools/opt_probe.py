@@ -5,8 +5,9 @@ measurement core (``start_session`` + ``warm_up``: page-cache
 read-through, no base-table .cache() since the r12 methodology ruling)
 and then:
 
-1. captures ``df.explain("formatted")`` to a file (for plans/r11/
-   before/after evidence),
+1. captures ``df.explain("formatted")`` to a file in ``--plans DIR``
+   (before/after evidence; the r11/r12 rounds' dumps are in commit
+   0ebdf1c under ``plans/r11/`` and ``plans/r12/``),
 2. times a cold pass + N warm passes with ``bench.time_passes`` (fresh
    ``spec.spark(...)`` build per pass, so plan-construction cost is
    included — the number bench.py reports),

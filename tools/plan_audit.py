@@ -1,7 +1,6 @@
 """Anti-pattern audit over every declared query's PHYSICAL plan.
 
-Builds (never executes, beyond the eager localCheckpoint pins some
-plans contain) every REGISTRY plan — the count is whatever
+Builds (never executes, beyond the eager pins some plans contain) every REGISTRY plan — the count is whatever
 ``len(REGISTRY)`` says, never hardcoded here — and flags the shapes
 that do not survive a 100x scale-up:
 
@@ -11,6 +10,12 @@ that do not survive a 100x scale-up:
   one task sorts the world.
 - ``python_udf``: row-at-a-time BatchEvalPython — the 10-100x-slower
   Python path where an Arrow variant exists.
+- ``lazy_pin_partial_consumer``: a lazy pin (``pins.pin(lazy=True)``)
+  under a final plan that holds a limit-style consumer (CollectLimit /
+  GlobalLimit / LocalLimit), which may stop before reading every
+  partition; Spark then re-runs the whole pin build in an end-of-job
+  fill-in job. Never ALLOW-listable: make the pin eager or drop the
+  limit.
 - ``rescan``: the same parquet table scanned more than RESCAN_MAX
   times in one plan — loop lineage re-derivation (persist the
   invariant instead). Round 6 dropped RESCAN_MAX 6 -> 3 after pinning
@@ -38,6 +43,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 RESCAN_MAX = 3
+
+#: reasons no ALLOW entry can excuse (unexplained_findings keeps them)
+NEVER_ALLOWED = frozenset({"global_window_unbounded", "lazy_pin_partial_consumer"})
 
 #: query -> full reason strings that are understood and acceptable at
 #: scale. Rescan entries name the table AND the count
@@ -102,14 +110,13 @@ def findings_from_digest(digest: dict) -> list[str]:
     """Anti-pattern reasons for one plan digest (tools/plan_summary
     schema). Shared by the CLI and the pytest gate. The rescan count
     sums final-plan scans AND scans executed inside pin builds
-    (localCheckpoint / persist) — the total physical reads per run, so
+    (pin / persist) — the total physical reads per run, so
     a pin cannot hide a rescan regression (round-6 ADVICE).
     ``global_window_unbounded`` (an empty-partition window with no
     limit/aggregate/pin dominating every input path) is emitted as its
-    own reason and MUST NOT ever be ALLOW-listed — the ALLOW contract
-    for ``global_window`` is that the digest machine-verified a bound
-    on every input path; tests/test_plan_tools.py enforces that no
-    ALLOW entry names it."""
+    own reason and is NEVER_ALLOWED — the ALLOW contract for
+    ``global_window`` is that the digest machine-verified a bound on
+    every input path; so is ``lazy_pin_partial_consumer``."""
     if "error" in digest:
         return [f"plan_error: {digest['error']}"]
     from tools.plan_summary import combined_scans
@@ -122,13 +129,15 @@ def findings_from_digest(digest: dict) -> list[str]:
     elif digest.get("global_window"):
         f.append("global_window")
     # pin_python_rowwise counts BatchEvalPython executed INSIDE
-    # localCheckpoint/persist pin builds — without it a pin-hidden
+    # pin/persist builds — without it a pin-hidden
     # row-wise UDF only ever reached the undifferentiated pin_python
     # counter and the absolute python_udf gate was blind to it
     # (round-7 ADVICE; only the baseline-relative regression gate
     # could catch growth)
     if digest.get("python_rowwise", 0) + digest.get("pin_python_rowwise", 0) > 0:
         f.append("python_udf")
+    if digest.get("lazy_pins", 0) and digest.get("partial_limit"):
+        f.append("lazy_pin_partial_consumer")
     for tbl, cnt in sorted(combined_scans(digest).items()):
         if cnt > RESCAN_MAX:
             f.append(f"rescan:{tbl}x{cnt}")
@@ -140,10 +149,10 @@ def unexplained_findings(
 ) -> dict[str, list[str]]:
     """Findings minus the ALLOW list. Shared by the CLI and the pytest
     gate (tests/test_plan_shapes.py) so the two can't drift. Matching
-    is exact on the full reason string."""
+    is exact on the full reason string; NEVER_ALLOWED reasons stay."""
     allow = ALLOW if allow is None else allow
     out = {
-        name: [r for r in reasons if r not in allow.get(name, set())]
+        name: [r for r in reasons if r in NEVER_ALLOWED or r not in allow.get(name, set())]
         for name, reasons in findings.items()
     }
     return {k: v for k, v in out.items() if v}

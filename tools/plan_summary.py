@@ -8,8 +8,8 @@ every declared query's executed plan into the counters that matter at
   (cache-aware — scans printed inside InMemoryRelation definitions are
   not counted; see tools/plan_audit.py for the round-5 false-positive
   story),
-- ``pin_scans``: parquet scans executed INSIDE pins — the plans that
-  ``localCheckpoint(eager=True)`` ran at build time plus each cached
+- ``pin_scans``: parquet scans executed INSIDE pins — the build plans
+  of ``pins.pin`` (seen through its observer) plus each cached
   InMemoryRelation's build plan (deduped by canonicalized-plan
   hashCode, exactly the CacheManager's own dedup key). Round-6 ADVICE:
   pins collapse lineage into ExistingRDD/InMemoryTableScan leaves, so
@@ -22,7 +22,11 @@ every declared query's executed plan into the counters that matter at
 - ``exchanges``: shuffle boundaries (hash/range/single),
 - ``broadcasts``: BroadcastExchange count (small-dim discipline),
 - ``pins``: InMemoryTableScan + Scan ExistingRDD leaves (persist /
-  localCheckpoint reuse points),
+  pin reuse points),
+- ``lazy_pins``: pins built with ``lazy=True``; ``partial_limit``: the
+  final plan holds a CollectLimit / GlobalLimit / LocalLimit. Together
+  they flag a lazy pin whose consumer may stop early (tools/plan_audit.py
+  ``lazy_pin_partial_consumer``),
 - ``codegen_spans``: WholeStageCodegen regions (JVM-side coverage),
 - ``python``: BatchEvalPython / ArrowEvalPython / FlatMapGroupsInPandas
   etc. (the deliberate Python-path surface),
@@ -41,7 +45,7 @@ every declared query's executed plan into the counters that matter at
 The committed PLAN_SUMMARY.json doubles as the plan-shape BASELINE:
 tests/test_plan_shapes.py fails if any query's digest gets worse than
 the committed one (more scans of a table, more python, a cartesian
-appearing) — so a removed localCheckpoint or a new rescan can't land
+appearing) — so a removed pin or a new rescan can't land
 silently even when it stays under the audit's absolute thresholds.
 
 Run: ``python tools/plan_summary.py [sf_dir]`` — writes
@@ -57,11 +61,15 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from sensor_data_pipeline_spark.pins import observing  # noqa: E402
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SUMMARY_PATH = os.path.join(ROOT, "PLAN_SUMMARY.json")
 
 
 _LIMIT_NODES = ("TakeOrderedAndProject", "GlobalLimit", "CollectLimit")
+#: limits that may stop before reading every partition (a top-k reads all)
+_PARTIAL_LIMITS = ("CollectLimit", "GlobalLimit", "LocalLimit")
 _AGG_NODES = ("HashAggregate", "ObjectHashAggregate", "SortAggregate")
 
 
@@ -243,6 +251,7 @@ def digest_jplan(jplan) -> dict:
         "python": _python_count(txt),
         "python_rowwise": _rowwise_count(txt),
         "cartesian": "CartesianProduct" in txt,
+        "partial_limit": any(n in txt for n in _PARTIAL_LIMITS),
         "global_window": global_windows > 0,
         "bounded_global_windows": bounded_global_windows,
         "global_windows_unbounded": global_windows_unbounded,
@@ -251,7 +260,7 @@ def digest_jplan(jplan) -> dict:
 
 def combined_scans(digest: dict) -> dict[str, int]:
     """Total physical reads per table for one run of the query: final
-    plan scans + scans executed inside pins (localCheckpoint builds and
+    plan scans + scans executed inside pins (pin builds and
     InMemoryRelation builds). This is the number the rescan audit
     gates on — it is blind to neither side (round-6 ADVICE)."""
     out = dict(digest.get("scans", {}))
@@ -260,89 +269,53 @@ def combined_scans(digest: dict) -> dict[str, int]:
     return out
 
 
-class _PinCapture:
-    """Instruments DataFrame.localCheckpoint (the Spark-4 classic
-    override — the base-class method is never dispatched) so every
-    pin's build plan is digested at the call site: the final plan only
-    shows the resulting ExistingRDD leaf (round-6 ADVICE blindness
-    fix). Each pin plan is ALSO walked for InMemoryRelation builds (a
-    persist consumed only inside a pin build never appears in the
-    final plan either — round-7 review finding); ``cache_seen`` is
-    shared between all pin captures and the final plan's fold so a
-    cache referenced from several places is counted once, matching the
-    CacheManager's one materialization. Use as a context manager; call
-    ``reset()`` between queries and ``digest_full(builder)`` to build
-    one query's combined digest (shared with tests, which seed mutants
-    through the same path the artifact uses)."""
+def digest_full(build) -> dict:
+    """Digest one query: ``build()`` returns the final DataFrame. Every
+    pin it builds is digested through the ``pins.observing`` hook,
+    since the final plan only shows the pin's ExistingRDD leaf; each
+    pin plan is also walked for InMemoryRelation builds (a persist
+    consumed only inside a pin build never appears in the final plan
+    either). ``cache_seen`` is shared by all pin builds and the final
+    plan's fold, so a cache referenced from several places is counted
+    once, matching the CacheManager's one materialization. Shared with
+    tests, which seed mutants through the same path the artifact uses."""
+    pin_digests: list[dict] = []
+    cache_seen: set[int] = set()
+    lazy_pins = 0
 
-    def __init__(self):
-        try:
-            import pyspark.sql.classic.dataframe as dfmod
-        except ImportError:  # pre-4.0 layout
-            import pyspark.sql.dataframe as dfmod
-        self._dfmod = dfmod
-        self._orig = dfmod.DataFrame.localCheckpoint
-        self.pin_digests: list[dict] = []
-        self.cache_seen: set[int] = set()
-
-    def __enter__(self):
-        capture = self
-
-        def capturing_lcp(df_self, *args, **kwargs):
-            try:
-                jplan = df_self._jdf.queryExecution().executedPlan()
-                jroot = jplan.initialPlan() if jplan.nodeName() == "AdaptiveSparkPlan" else jplan
-                d = digest_jplan(jplan)
-                cache_scans: dict[str, int] = {}
-                d["pin_python"], d["pin_python_rowwise"] = _fold_cache_builds(
-                    jroot, cache_scans, capture.cache_seen
-                )
-                d["pin_scans"] = cache_scans
-                capture.pin_digests.append(d)
-            except Exception:
-                pass
-            return capture._orig(df_self, *args, **kwargs)
-
-        self._dfmod.DataFrame.localCheckpoint = capturing_lcp
-        return self
-
-    def __exit__(self, *exc):
-        self._dfmod.DataFrame.localCheckpoint = self._orig
-        return False
-
-    def reset(self) -> None:
-        self.pin_digests.clear()
-        self.cache_seen.clear()
-
-    def digest_full(self, build) -> dict:
-        """Digest one query: ``build()`` returns the final DataFrame
-        (running any localCheckpoint pins under this capture); the
-        result folds pin-build scans/python and cache builds into the
-        final plan's digest."""
-        self.reset()
-        jplan = build()._jdf.queryExecution().executedPlan()
-        d = digest_jplan(jplan)
-        pin_scans: dict[str, int] = {}
-        pin_python = 0
-        pin_rowwise = 0
-        for pd in self.pin_digests:
-            for tbl, cnt in combined_scans(pd).items():
-                pin_scans[tbl] = pin_scans.get(tbl, 0) + cnt
-            pin_python += pd.get("python", 0) + pd.get("pin_python", 0)
-            pin_rowwise += pd.get("python_rowwise", 0) + pd.get("pin_python_rowwise", 0)
-            # a pin over an unbounded global window or cartesian is
-            # just as fatal as one in the final plan
-            d["global_windows_unbounded"] += pd.get("global_windows_unbounded", 0)
-            d["cartesian"] = d["cartesian"] or pd.get("cartesian", False)
-        # cached (persist()) builds referenced by the final plan
+    def observe(df, lazy: bool) -> None:
+        nonlocal lazy_pins
+        jplan = df._jdf.queryExecution().executedPlan()
         jroot = jplan.initialPlan() if jplan.nodeName() == "AdaptiveSparkPlan" else jplan
-        fold_py, fold_rowwise = _fold_cache_builds(jroot, pin_scans, self.cache_seen)
-        pin_python += fold_py
-        pin_rowwise += fold_rowwise
-        d["pin_scans"] = pin_scans
-        d["pin_python"] = pin_python
-        d["pin_python_rowwise"] = pin_rowwise
-        return d
+        pd = digest_jplan(jplan)
+        pd["pin_scans"] = {}
+        pd["pin_python"], pd["pin_python_rowwise"] = _fold_cache_builds(jroot, pd["pin_scans"], cache_seen)
+        pin_digests.append(pd)
+        lazy_pins += lazy
+
+    with observing(observe):
+        jplan = build()._jdf.queryExecution().executedPlan()
+    d = digest_jplan(jplan)
+    pin_scans: dict[str, int] = {}
+    pin_python = 0
+    pin_rowwise = 0
+    for pd in pin_digests:
+        for tbl, cnt in combined_scans(pd).items():
+            pin_scans[tbl] = pin_scans.get(tbl, 0) + cnt
+        pin_python += pd.get("python", 0) + pd.get("pin_python", 0)
+        pin_rowwise += pd.get("python_rowwise", 0) + pd.get("pin_python_rowwise", 0)
+        # a pin over an unbounded global window or cartesian is
+        # just as fatal as one in the final plan
+        d["global_windows_unbounded"] += pd.get("global_windows_unbounded", 0)
+        d["cartesian"] = d["cartesian"] or pd.get("cartesian", False)
+    # cached (persist()) builds referenced by the final plan
+    jroot = jplan.initialPlan() if jplan.nodeName() == "AdaptiveSparkPlan" else jplan
+    fold_py, fold_rowwise = _fold_cache_builds(jroot, pin_scans, cache_seen)
+    d["pin_scans"] = pin_scans
+    d["pin_python"] = pin_python + fold_py
+    d["pin_python_rowwise"] = pin_rowwise + fold_rowwise
+    d["lazy_pins"] = lazy_pins
+    return d
 
 
 def summarize(sf_dir: str) -> dict[str, dict]:
@@ -351,12 +324,11 @@ def summarize(sf_dir: str) -> dict[str, dict]:
 
     spark = get_spark(app_name="plan-summary")
     out: dict[str, dict] = {}
-    with _PinCapture() as cap:
-        for name, spec in sorted(REGISTRY.items()):
-            try:
-                out[name] = cap.digest_full(lambda: spec.spark(spark, sf_dir))
-            except Exception as e:
-                out[name] = {"error": str(e).splitlines()[0][:120]}
+    for name, spec in sorted(REGISTRY.items()):
+        try:
+            out[name] = digest_full(lambda: spec.spark(spark, sf_dir))
+        except Exception as e:
+            out[name] = {"error": str(e).splitlines()[0][:120]}
     return out
 
 
@@ -419,7 +391,7 @@ def main() -> int:
             "per-query physical-plan digest at sf0.001 (plan shape is "
             "scale-invariant); scans = real FileSourceScan leaves per "
             "table in the final plan (cache-aware), pin_scans = parquet "
-            "scans executed inside localCheckpoint/persist pin builds "
+            "scans executed inside pin/persist builds "
             "(the audit's rescan gate sums both), pin_python = python "
             "ops inside pin builds, pin_python_rowwise = BatchEvalPython "
             "inside pin builds (gated by the absolute python_udf audit "
@@ -427,7 +399,9 @@ def main() -> int:
             "broadcasts = BroadcastExchange nodes, pins = cached/"
             "checkpointed reuse leaves, codegen_spans = WholeStageCodegen "
             "regions, python = deliberate Python-path operators, "
-            "python_rowwise = BatchEvalPython only, cartesian/"
+            "python_rowwise = BatchEvalPython only, lazy_pins = pins "
+            "built lazy, partial_limit = final plan holds a "
+            "CollectLimit/GlobalLimit/LocalLimit, cartesian/"
             "global_window = anti-pattern booleans, "
             "global_windows_unbounded = empty-partition windows with no "
             "limit/aggregate/pin dominating every input path (never "

@@ -55,11 +55,7 @@ def main() -> int:
     # advisory context only.
     import plan_summary as ps
 
-    cap = ps._PinCapture()
-    with cap:
-        digest = cap.digest_full(
-            lambda: spec.spark(spark, "/root/testdata/sf0.001")
-        )
+    digest = ps.digest_full(lambda: spec.spark(spark, "/root/testdata/sf0.001"))
     base = json.load(open(os.path.join(ROOT, "PLAN_SUMMARY.json")))["queries"][name]
     diff = {k: (base.get(k), digest.get(k)) for k in set(base) | set(digest)
             if base.get(k) != digest.get(k)}
