@@ -745,11 +745,11 @@ def q199_custom_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:  # 
     counters, progress is a pure function of the checkpointed offset,
     and the per-device min/max/count columns prove no tick was lost
     or duplicated across batch boundaries — the oracle regenerates
-    the same readings relationally. (sf_dir unused: the source
-    synthesizes.)"""
-    import time
-
+    the same readings relationally. ``streaming.drain`` runs a Python
+    source until it reports no new offset, so no poll of the sink and
+    no deadline. (sf_dir unused: the source synthesizes.)"""
     from sensor_data_pipeline_spark.sources.sensor_sim import register_sensor_sim
+    from sensor_data_pipeline_spark.streaming.drain import drain
 
     register_sensor_sim(spark)
     stream = (
@@ -759,27 +759,10 @@ def q199_custom_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:  # 
         .option("maxTicks", "40")
         .load()
     )
-    name = "q199_mem"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    try:
-        target = 5 * 40
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if spark.sql(f"SELECT count(*) AS n FROM {name}").first().n >= target:
-                break
-            time.sleep(0.15)
-    finally:
-        q.stop()
-        q.awaitTermination()
-    out = spark.table(name)
+    drain(stream.writeStream.format("memory").queryName("q199_mem"))
     return (
-        out.groupBy("device")
+        spark.table("q199_mem")
+        .groupBy("device")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_ticks"),
             F.min("tick").cast("bigint").alias("first_tick"),
@@ -816,22 +799,23 @@ def q207_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:  # noq
     final snapshot must equal the closed-form per-device totals. This
     is `MERGE INTO target USING changes` running continuously — the
     warehouse-apply half of the reference's consumer loop — proven
-    end-to-end with a relational oracle. (sf_dir unused: the source
-    synthesizes.)"""
+    end-to-end with a relational oracle. ``streaming.drain`` runs the
+    Python source until it reports no new offset, so the snapshot is
+    final when it returns: no poll, no deadline, and a failed epoch
+    raises. (sf_dir unused: the source synthesizes.)"""
     import shutil
-    import time
 
-    from sensor_data_pipeline_spark.sources.sensor_sim import reading, register_sensor_sim
+    from sensor_data_pipeline_spark.sources.sensor_sim import register_sensor_sim
     from sensor_data_pipeline_spark.sources.warehouse import SCRATCH
     from sensor_data_pipeline_spark.streaming.cdc import cdc_apply_stream, latest_snapshot
+    from sensor_data_pipeline_spark.streaming.drain import drain
 
     register_sensor_sim(spark)
-    devices, max_ticks = 4, 48
     stream = (
         spark.readStream.format("sensor_sim")
-        .option("devices", str(devices))
+        .option("devices", "4")
         .option("ticksPerBatch", "16")
-        .option("maxTicks", str(max_ticks))
+        .option("maxTicks", "48")
         .load()
     )
     changes = stream.select(
@@ -840,29 +824,7 @@ def q207_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:  # noq
     )
     root = f"{SCRATCH}/cdc_stream/q207"
     shutil.rmtree(root, ignore_errors=True)
-    expected = sum(
-        reading(d, t)[3] for d in range(devices) for t in range(max_ticks)
-    )
-    # scope the merge's shuffle width to the state volume (4 keys),
-    # not the session's batch setting — same rationale as _drain's
-    # state_partitions in plans/streaming_queries.py
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    q = cdc_apply_stream(changes, root, trigger_once=False)
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            try:
-                total = latest_snapshot(spark, root).agg(F.sum("bal_cents")).first()[0]
-            except Exception:
-                total = None  # snapshot version mid-write; retry
-            if total == expected:
-                break
-            time.sleep(0.2)
-    finally:
-        q.stop()
-        q.awaitTermination()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    drain(cdc_apply_stream(changes, root))
     return latest_snapshot(spark, root).orderBy("key")
 
 

@@ -1,7 +1,8 @@
 """Declared queries that exercise the Structured-Streaming layer
 through the driver contract: each builds a file-source stream over the
-sf parquet, drains it with an availableNow trigger into a memory sink,
-and returns the sink's contents as the result DataFrame.
+sf parquet, runs it to the end with ``streaming.drain`` (availableNow,
+stateful operators at ``drain.STATE_PARTITIONS`` partitions) into a
+memory sink, and returns the sink's contents as the result DataFrame.
 
 The watermark-emission query has a real SQL oracle: with availableNow
 all data lands in one batch, so the final watermark is exactly
@@ -18,44 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sensor_data_pipeline_spark.plans.registry import register
+from sensor_data_pipeline_spark.streaming.drain import drain
 from sensor_data_pipeline_spark.streaming.pipelines import windowed_event_stats
 from sensor_data_pipeline_spark.streaming.stateful import sessionize_stream
-
-
-def _drain(stream_df: DataFrame, name: str, state_partitions: int = 4) -> DataFrame:
-    """Start → availableNow → stop, returning the memory sink.
-
-    ``state_partitions`` pins the stateful-operator partition count for
-    THIS query's (fresh) checkpoint. State stores cost real per-
-    partition overhead (provider init, changelog files, commit fsync
-    per partition per batch), so their count must track state VOLUME —
-    at sf0.1 a handful; on a 100 TB/day stream, thousands. Inheriting
-    the session's batch shuffle setting (32 here) made every stateful
-    drain pay 4-8x its useful work: q96's two-sided join held 64 state
-    stores for ~40k rows. The conf is scoped: set at .start() (when the
-    streaming plan binds it) and restored immediately after."""
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # the setting is bound when the FIRST BATCH is planned (async, after
-    # start()), so it stays lowered until the drain completes
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # availableNow self-terminates after the final no-data batch
-        # (the one that advances the watermark and flushes closed
-        # windows); awaitTermination is the race-free way to observe
-        # that, unlike processAllAvailable()+stop() which can cut the
-        # run before the watermark-advancing batch commits.
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -96,8 +62,9 @@ def q67_stream_watermark_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final watermark (max ts - 1 h) — the oracle reproduces that
     subset relationally. This differentially pins Spark's watermark
     semantics, not just the agg."""
-    out = _drain(windowed_event_stats(_events_stream(spark, sf_dir)), "q67_mem")
-    return out.orderBy("win_start", "event_type")
+    stats = windowed_event_stats(_events_stream(spark, sf_dir))
+    drain(stats.writeStream.format("memory").queryName("q67_mem"))
+    return spark.table("q67_mem").orderBy("win_start", "event_type")
 
 
 @register(
@@ -143,9 +110,10 @@ def q68_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value") - 50.0).alias("signal"),  # centered so the sign flips
         F.col("value").alias("pct"),
     )
-    out = _drain(sessionize_stream(readings), "q68_mem")
+    drain(sessionize_stream(readings).writeStream.format("memory").queryName("q68_mem"))
     return (
-        out.groupBy("k")
+        spark.table("q68_mem")
+        .groupBy("k")
         .agg(
             F.max("session_id").cast("bigint").alias("n_sessions"),
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -173,9 +141,10 @@ def q69_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # forever; WithinWatermark ages keys out once the watermark passes,
     # which is what makes streaming dedup viable on an unbounded stream
     deduped = stream.dropDuplicatesWithinWatermark(["event_id"])
-    out = _drain(deduped, "q69_mem")
+    drain(deduped.writeStream.format("memory").queryName("q69_mem"))
     return (
-        out.groupBy("event_type")
+        spark.table("q69_mem")
+        .groupBy("event_type")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_unique"))
         .orderBy("event_type")
     )
@@ -201,9 +170,10 @@ def q70_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers = F.broadcast(load_table(spark, "customer", sf_dir))
     stream = _events_stream(spark, sf_dir)
     joined = stream.join(customers, stream.user_id == customers.c_custkey)
-    out = _drain(joined.select("c_mktsegment", "value"), "q70_mem")
+    drain(joined.select("c_mktsegment", "value").writeStream.format("memory").queryName("q70_mem"))
     return (
-        out.groupBy("c_mktsegment")
+        spark.table("q70_mem")
+        .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             (F.sum(F.round(F.col("value") * 100, 0).cast("bigint")) / 100.0).alias("sum_value"),
@@ -250,9 +220,10 @@ def q96_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         purchases,
         F.expr("v_uid = p_uid AND p_ts > view_ts AND p_ts <= view_ts + interval 1 hour"),
     )
-    out = _drain(joined.select("v_uid"), "q96_mem")
+    drain(joined.select("v_uid").writeStream.format("memory").queryName("q96_mem"))
     return (
-        out.groupBy((F.col("v_uid") % 16).cast("bigint").alias("user_bucket"))
+        spark.table("q96_mem")
+        .groupBy((F.col("v_uid") % 16).cast("bigint").alias("user_bucket"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
         .orderBy("user_bucket")
     )
@@ -329,9 +300,10 @@ def q162_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("v_uid = p_uid AND p_ts > view_ts AND p_ts <= view_ts + interval 1 hour"),
         "leftOuter",
     )
-    out = _drain(joined.select("v_uid", "p_uid"), "q162_mem")
+    drain(joined.select("v_uid", "p_uid").writeStream.format("memory").queryName("q162_mem"))
     return (
-        out.groupBy((F.col("v_uid") % 16).cast("bigint").alias("user_bucket"))
+        spark.table("q162_mem")
+        .groupBy((F.col("v_uid") % 16).cast("bigint").alias("user_bucket"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.count("p_uid").cast("bigint").alias("n_matched"),
@@ -398,8 +370,8 @@ def q170_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    out = _drain(sess, "q170_mem")
-    return out.orderBy("user_id", "session_start")
+    drain(sess.writeStream.format("memory").queryName("q170_mem"))
+    return spark.table("q170_mem").orderBy("user_id", "session_start")
 
 
 @register(
@@ -424,25 +396,8 @@ def q171_stream_complete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle. No watermark needed: complete mode never drops state."""
     stream = _events_stream(spark, sf_dir)
     counts = stream.groupBy("event_type").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    spark_ = stream.sparkSession
-    prev = spark_.conf.get("spark.sql.shuffle.partitions")
-    spark_.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            counts.writeStream.format("memory")
-            .queryName("q171_mem")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark_.conf.set("spark.sql.shuffle.partitions", prev)
-    return (
-        spark_.sql("SELECT * FROM q171_mem")
-        .orderBy(F.col("n").desc(), "event_type")
-        .limit(5)
-    )
+    drain(counts.writeStream.format("memory").queryName("q171_mem").outputMode("complete"))
+    return spark.table("q171_mem").orderBy(F.col("n").desc(), "event_type").limit(5)
 
 
 @register(
@@ -513,18 +468,7 @@ def q180_stream_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         bad.select("event_id").write.mode("overwrite").json(f"{dlq_dir}/batch_{batch_id}")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            wired.writeStream.foreachBatch(fanout)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(wired.writeStream.foreachBatch(fanout).option("checkpointLocation", f"{base}/ckpt"))
 
     main = (
         spark.read.schema("event_id long, event_type string")
@@ -569,41 +513,21 @@ def q183_stream_observe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch aggregate — so the oracle differentially pins that the
     OBSERVED telemetry equals the TRUTH, which is the whole point of
     an audit channel. This is how a 100 TB ingest watches itself:
-    counts/sums come from metrics, never from a second scan. Metrics
-    are collected via a StreamingQueryListener (sees every batch
-    exactly once) rather than recentProgress, whose 100-entry ring
-    buffer would silently undercount a drain of >100 micro-batches."""
-    from sensor_data_pipeline_spark.streaming.listener import ObservedMetricsListener
-
+    counts/sums come from metrics, never from a second scan. The
+    metrics are summed from the progress ``drain`` returns, with no
+    listener: drain raises when the query's progress ring buffer (99
+    reports by default) fills, so a drain long enough to drop a
+    batch's report fails instead of undercounting."""
     stream = _events_stream(spark, sf_dir)
     observed = stream.observe(
         "wire_audit",
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias("sum_cents"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    listener = ObservedMetricsListener("wire_audit")
-    spark.streams.addListener(listener)
-    try:
-        q = (
-            observed.writeStream.format("noop")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        last = q.lastProgress
-        if last is not None:
-            listener.wait_for_batch(str(q.id), last["batchId"])
-        totals = listener.totals(str(q.id))
-        total_rows = int(totals.get("n_rows", 0))
-        total_cents = int(totals.get("sum_cents", 0))
-    finally:
-        spark.streams.removeListener(listener)
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.createDataFrame(
-        [(total_rows, total_cents)], schema="n_rows long, sum_cents long"
-    )
+    progress = drain(observed.writeStream.format("noop"))
+    audits = [p.observedMetrics.get("wire_audit") for p in progress]
+    totals = [sum(m[k] or 0 for m in audits if m) for k in ("n_rows", "sum_cents")]
+    return spark.createDataFrame([totals], schema="n_rows long, sum_cents long")
 
 
 @register(
@@ -651,8 +575,8 @@ def q200_stream_recursive_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id"),
         F.round(F.col("value") * 100, 0).cast("bigint").alias("x"),
     )
-    out = _drain(ewma_stream(readings), "q200_mem")
-    return out.select("event_id", "k", "ewma").orderBy("event_id")
+    drain(ewma_stream(readings).writeStream.format("memory").queryName("q200_mem"))
+    return spark.table("q200_mem").select("event_id", "k", "ewma").orderBy("event_id")
 
 
 @register(
@@ -707,7 +631,8 @@ def q233_stream_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("tick_ts"),
         F.col("event_id"),
     )
-    out = _drain(token_bucket_stream(readings), "q233_mem")
+    drain(token_bucket_stream(readings).writeStream.format("memory").queryName("q233_mem"))
+    out = spark.table("q233_mem")
     return out.select("event_id", "k", "tokens_after", "allowed").orderBy("event_id")
 
 
@@ -777,7 +702,8 @@ def q259_stream_learned_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
             > F.expr("CAST(3 AS DOUBLE) * CAST(1.4826 AS DOUBLE) * mad")
         ).alias("is_anomaly"),
     )
-    out = _drain(flagged, "q259_mem")
+    drain(flagged.writeStream.format("memory").queryName("q259_mem"))
+    out = spark.table("q259_mem")
     return out.select("event_id", "user_id", "cents", "is_anomaly").orderBy("event_id")
 
 
@@ -814,8 +740,8 @@ def q260_stream_tws_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("tick_ts"),
         F.col("value"),
     )
-    out = _drain(delta_stream_v1(readings), "q260_mem")
-    return out.select("k", "tick_ts", "value", "delta").orderBy("k", "tick_ts")
+    drain(delta_stream_v1(readings).writeStream.format("memory").queryName("q260_mem"))
+    return spark.table("q260_mem").select("k", "tick_ts", "value", "delta").orderBy("k", "tick_ts")
 
 
 @register(
@@ -888,16 +814,14 @@ def q287_stream_nearest_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AND c_ts <= p_ts + interval 5 minutes"
         ),
     )
-    out = _drain(
-        j.select(
-            "pid",
-            F.col("p_uid").alias("user_id"),
-            F.abs(F.unix_micros("c_ts") - F.unix_micros("p_ts")).alias("dist"),
-            F.unix_micros("c_ts").alias("c_us"),
-        ),
-        "q287_mem",
+    pairs = j.select(
+        "pid",
+        F.col("p_uid").alias("user_id"),
+        F.abs(F.unix_micros("c_ts") - F.unix_micros("p_ts")).alias("dist"),
+        F.unix_micros("c_ts").alias("c_us"),
     )
-    best = out.groupBy("pid", "user_id").agg(
+    drain(pairs.writeStream.format("memory").queryName("q287_mem"))
+    best = spark.table("q287_mem").groupBy("pid", "user_id").agg(
         F.min(F.struct("dist", "c_us")).alias("best")
     )
     return best.select(
@@ -961,23 +885,11 @@ def q301_stream_hopping_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them back as a batch scan.
     sink_dir = tempfile.mkdtemp(prefix="q301_sink_")
     ckpt = tempfile.mkdtemp(prefix="q301_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", sink_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    out = spark.read.parquet(sink_dir)
+    sink = deduped.writeStream.format("parquet").option("path", sink_dir)
+    drain(sink.option("checkpointLocation", ckpt))
     return (
-        out.groupBy(F.col("w.start").alias("win_start"))
+        spark.read.parquet(sink_dir)
+        .groupBy(F.col("w.start").alias("win_start"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
         .orderBy("win_start")
     )
@@ -1023,19 +935,7 @@ def q303_stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).cast("bigint").alias("sum_cents"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(agg.writeStream.format("noop").outputMode("complete").option("checkpointLocation", ckpt))
     state = spark.read.format("statestore").load(ckpt)
     # the value struct exposes the PHYSICAL aggregation buffer, named
     # after the aggregate functions (`count`, `sum`), not the query's

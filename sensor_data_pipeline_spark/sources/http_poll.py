@@ -33,6 +33,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sensor_data_pipeline_spark.streaming.drain import drain
+
 OBS_DOC_SCHEMA = "tick long, obs array<struct<place string, reading double>>"
 
 
@@ -77,11 +79,11 @@ def http_poll_query(
     out_path: str,
     checkpoint: str,
 ):
-    """Build (not start) the polling writeStream: each micro-batch
-    collects its tick markers (tiny — tick numbers, not data), fetches
-    one document per tick on the driver, parses, and appends parquet.
-    Exactly-once: the parquet sink commit and the checkpoint advance
-    together per batch id."""
+    """Build (not start) the polling writeStream; ``streaming.drain``
+    runs it. Each micro-batch collects its tick markers (tiny — tick
+    numbers, not data), fetches one document per tick on the driver,
+    parses, and appends parquet. Exactly-once: the parquet sink commit
+    and the checkpoint advance together per batch id."""
 
     def poll(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -92,11 +94,7 @@ def http_poll_query(
         docs = spark.createDataFrame(bodies, "tick long, body string")
         parse_observation_doc(docs).write.mode("append").parquet(out_path)
 
-    return (
-        tick_stream.writeStream.foreachBatch(poll)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return tick_stream.writeStream.foreachBatch(poll).option("checkpointLocation", checkpoint)
 
 
 def fetch_url_column(
@@ -149,6 +147,5 @@ def run_poll_pipeline(
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{ticks_dir}/batch_*")
     )
-    q = http_poll_query(tick_stream, fetcher, url, out_path, checkpoint).start()
-    q.awaitTermination()
+    drain(http_poll_query(tick_stream, fetcher, url, out_path, checkpoint))
     return spark.read.parquet(out_path)

@@ -7,6 +7,11 @@ fan-out sinks onto readStream/writeStream equivalents. Batch twins of
 each transform live in ``plans/``/``operators/`` — correctness is
 proven there against DuckDB; these streaming forms reuse the same
 column expressions so the logic cannot drift.
+
+Every stream runs through ``drain`` (streaming/drain.py): the builders
+here (``cdc_apply_stream``, ``publish_stream``, ``fanout_stream``)
+return unstarted writers, and ``drain`` owns the state width, the
+termination rule and the per-batch progress it returns.
 """
 
 from sensor_data_pipeline_spark.streaming.pipelines import (
@@ -20,6 +25,7 @@ from sensor_data_pipeline_spark.streaming.cdc import (
     latest_snapshot,
     merge_batch,
 )
+from sensor_data_pipeline_spark.streaming.drain import drain
 from sensor_data_pipeline_spark.streaming.sinks import (
     FileSpoolPublisher,
     ConsolePublisher,
@@ -39,6 +45,7 @@ __all__ = [
     "Publisher",
     "PublisherForeachWriter",
     "consumer_pipeline",
+    "drain",
     "fanout_stream",
     "producer_pipeline",
     "publish_stream",

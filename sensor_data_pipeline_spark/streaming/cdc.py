@@ -30,7 +30,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter
 
 SNAPSHOT_SCHEMA = T.StructType(
     [
@@ -81,11 +81,12 @@ def cdc_apply_stream(
     key_col: str = "key",
     delta_col: str = "delta_cents",
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Continuously apply a change stream to the versioned snapshot at
-    ``target_root``. Exactly-once across restarts: offsets live in the
-    checkpoint, application is idempotent per epoch (see module doc)."""
+) -> DataStreamWriter:
+    """The (unstarted) writer that applies a change stream to the
+    versioned snapshot at ``target_root``; run it with
+    ``streaming.drain``. Exactly-once across restarts: offsets live in
+    the checkpoint, application is idempotent per epoch (see module
+    doc)."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -96,6 +97,4 @@ def cdc_apply_stream(
     writer = changes.writeStream.foreachBatch(apply_batch).queryName("cdc_apply")
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer

@@ -45,62 +45,3 @@ class SyslogAnalogListener(StreamingQueryListener):
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         self.terminated.append(str(event.id))
         logger.info("query terminated: %s", event.id)
-
-
-class ObservedMetricsListener(StreamingQueryListener):
-    """Accumulates one named observation's metrics per micro-batch.
-
-    ``StreamingQuery.recentProgress`` is a ring buffer capped at
-    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100), so
-    summing metrics from it silently drops the oldest batches once a
-    drain exceeds 100 micro-batches. A listener sees EVERY progress
-    event exactly once, making audits batch-count independent. Events
-    arrive on the listener-bus thread, so callers must
-    ``wait_for_batch`` the final batchId before reading."""
-
-    def __init__(self, observation_name: str) -> None:
-        self.observation_name = observation_name
-        self.metrics: dict[tuple[str, int], dict] = {}
-        self.seen_batches: set[tuple[str, int]] = set()
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        key = (str(p.id), p.batchId)
-        self.seen_batches.add(key)
-        m = (p.observedMetrics or {}).get(self.observation_name)
-        if m is not None:
-            self.metrics[key] = m.asDict()
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
-
-    def wait_for_batch(self, query_id: str, batch_id: int, timeout: float = 30.0) -> None:
-        """Block until the listener bus has delivered `batch_id`'s
-        progress event (delivery is async w.r.t. awaitTermination)."""
-        import time
-
-        deadline = time.time() + timeout
-        while batch_id >= 0 and (query_id, batch_id) not in self.seen_batches:
-            if time.time() > deadline:
-                raise TimeoutError(
-                    f"progress for batch {batch_id} of {query_id} not delivered"
-                )
-            time.sleep(0.05)
-
-    def totals(self, query_id: str) -> dict[str, float]:
-        """Sum each metric column across all batches of one query
-        (None from empty batches counts as 0)."""
-        out: dict[str, float] = {}
-        for (qid, _), m in self.metrics.items():
-            if qid != query_id:
-                continue
-            for k, v in m.items():
-                if v is not None:
-                    out[k] = out.get(k, 0) + v
-        return out

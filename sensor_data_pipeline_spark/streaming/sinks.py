@@ -26,7 +26,7 @@ import logging
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter
 
 logger = logging.getLogger("sensor_data_pipeline_spark.sinks")
 
@@ -164,26 +164,17 @@ def publish_stream(
     publisher: Publisher,
     *,
     checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-    processing_time: str | None = None,
     query_name: str = "publish",
-) -> StreamingQuery:
-    """Start a streaming publish of MQTT_MESSAGE-shaped rows.
-
-    ``processing_time`` is the engine form of
-    ``collection_event_interval_ms`` (S1); ``trigger_once``
-    (availableNow) drains what exists and stops — the test/backfill
-    mode. With a checkpoint dir the delivery is exactly-once per epoch
-    (QoS 2 analog); without, at-least-once (QoS 1).
+) -> DataStreamWriter:
+    """The (unstarted) writer for a streaming publish of
+    MQTT_MESSAGE-shaped rows; run it with ``streaming.drain``. With a
+    checkpoint dir the delivery is exactly-once per epoch (QoS 2
+    analog); without, at-least-once (QoS 1).
     """
     writer = messages.writeStream.foreach(PublisherForeachWriter(publisher)).queryName(query_name)
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return writer
 
 
 def fanout_stream(
@@ -191,9 +182,8 @@ def fanout_stream(
     routes: dict,
     *,
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
     query_name: str = "fanout",
-) -> StreamingQuery:
+) -> DataStreamWriter:
     """One stream, N sinks, each with its own projection — the engine
     form of the reference consumer driving two 7-segment displays with
     different fields from the same message (K3,
@@ -228,6 +218,4 @@ def fanout_stream(
     writer = df.writeStream.foreachBatch(apply).queryName(query_name)
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer

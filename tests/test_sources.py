@@ -89,9 +89,8 @@ def test_sensor_sim_stream_ticks_advance(spark):
     """Streaming form: offsets are tick counters; the query drains
     ticksPerBatch ticks per micro-batch up to maxTicks, matching the
     reference's fixed-interval collection loop semantics."""
-    import time
-
     from sensor_data_pipeline_spark.sources.sensor_sim import register_sensor_sim
+    from sensor_data_pipeline_spark.streaming import drain
 
     register_sensor_sim(spark)
     stream = (
@@ -101,28 +100,14 @@ def test_sensor_sim_stream_ticks_advance(spark):
         .option("maxTicks", "10")
         .load()
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("sensor_sim_out")
-        .outputMode("append")
-        .trigger(processingTime="300 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            if spark.sql("SELECT count(*) n FROM sensor_sim_out").first().n >= 20:
-                break
-            time.sleep(0.5)
-        out = spark.sql("SELECT * FROM sensor_sim_out").collect()
-        # 2 devices x 10 ticks, no duplicates, ticks 0..9 each
-        assert len(out) == 20
-        per_dev = {}
-        for r in out:
-            per_dev.setdefault(r.device, set()).add(r.tick)
-        assert per_dev == {"dev0": set(range(10)), "dev1": set(range(10))}
-    finally:
-        q.stop()
+    drain(stream.writeStream.format("memory").queryName("sensor_sim_out"))
+    out = spark.table("sensor_sim_out").collect()
+    # 2 devices x 10 ticks, no duplicates, ticks 0..9 each
+    assert len(out) == 20
+    per_dev = {}
+    for r in out:
+        per_dev.setdefault(r.device, set()).add(r.tick)
+    assert per_dev == {"dev0": set(range(10)), "dev1": set(range(10))}
 
 
 def test_sensor_sim_stream_restart_no_redelivery(spark, tmp_path):
@@ -130,15 +115,14 @@ def test_sensor_sim_stream_restart_no_redelivery(spark, tmp_path):
     progress is a pure function of the checkpointed offset, so a
     second run with the same checkpoint resumes at the committed tick
     instead of re-delivering from 0."""
-    import time
-
     from sensor_data_pipeline_spark.sources.sensor_sim import register_sensor_sim
+    from sensor_data_pipeline_spark.streaming import drain
 
     register_sensor_sim(spark)
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
 
-    def run_until(n_rows, max_ticks):
+    def run(max_ticks):
         stream = (
             spark.readStream.format("sensor_sim")
             .option("devices", "1")
@@ -147,30 +131,13 @@ def test_sensor_sim_stream_restart_no_redelivery(spark, tmp_path):
             .load()
         )
         # parquet sink: supports checkpoint recovery (memory sink does not)
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="300 milliseconds")
-            .start()
-        )
-        try:
-            deadline = time.time() + 90
-            while time.time() < deadline:
-                try:
-                    got = [r.tick for r in spark.read.parquet(out).collect()]
-                except Exception:
-                    got = []
-                if len(got) >= n_rows:
-                    return got
-                time.sleep(0.5)
-            return got
-        finally:
-            q.stop()
+        sink = stream.writeStream.format("parquet").option("path", out)
+        drain(sink.option("checkpointLocation", ckpt))
+        return [r.tick for r in spark.read.parquet(out).collect()]
 
-    first = run_until(10, max_ticks=10)
+    first = run(max_ticks=10)
     assert sorted(first) == list(range(10))
-    second = run_until(20, max_ticks=20)
+    second = run(max_ticks=20)
     # cumulative file output: each tick exactly once — a reader that
     # restarted its offset counter at 0 would re-deliver ticks 0-9
     assert sorted(second) == list(range(20)), second
@@ -236,6 +203,7 @@ def test_http_poll_checkpoint_no_refetch(spark, tmp_path):
         canned_station_fetcher,
         http_poll_query,
     )
+    from sensor_data_pipeline_spark.streaming import drain
 
     calls: list[int] = []
 
@@ -252,9 +220,7 @@ def test_http_poll_checkpoint_no_refetch(spark, tmp_path):
         stream = (
             spark.readStream.schema("tick long").option("maxFilesPerTrigger", 1).parquet(f"{src}/f*")
         )
-        q = http_poll_query(stream, recording_fetcher, "https://x.example/obs", out, ckpt).start()
-        q.awaitTermination(120)
-        q.stop()
+        drain(http_poll_query(stream, recording_fetcher, "https://x.example/obs", out, ckpt))
 
     spark.range(0, 5).selectExpr("id AS tick").coalesce(1).write.parquet(f"{src}/f0")
     run_once()

@@ -1,7 +1,7 @@
 """Streaming-layer tests, driven deterministically: parquet file
-source → availableNow trigger → memory/collecting sink →
-processAllAvailable. Correctness of the column logic is already proven
-by the batch oracle tests; these prove the streaming plumbing
+source → memory/collecting sink, run to the end by ``streaming.drain``
+(availableNow + awaitTermination). Correctness of the column logic is
+already proven by the batch oracle tests; these prove the streaming plumbing
 (trigger, wire serde round-trip, corrupt routing, keyed state,
 publisher lifecycle)."""
 
@@ -18,6 +18,7 @@ from sensor_data_pipeline_spark.schemas import MQTT_MESSAGE, READINGS
 from sensor_data_pipeline_spark.streaming import (
     FileSpoolPublisher,
     consumer_pipeline,
+    drain,
     producer_pipeline,
     publish_stream,
     sessionize_stream,
@@ -42,17 +43,9 @@ def stream_dir(tmp_path):
     return make
 
 
-def drain(stream_df, name):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
+def to_memory(stream_df, name):
+    drain(stream_df.writeStream.format("memory").queryName(name))
+    return stream_df.sparkSession.table(name)
 
 
 def test_producer_consumer_wire_roundtrip(spark, stream_dir):
@@ -60,7 +53,7 @@ def test_producer_consumer_wire_roundtrip(spark, stream_dir):
         [(ts("2024-12-23 10:00:00"), 21.53, 22.17, 60.2)],
         "timestamp_utc timestamp, temp_outdoor_celsius double, temp_indoor_celsius double, rh_outdoor double",
     )
-    msgs = drain(producer_pipeline(stream_dir(readings, READINGS)), "wire_out")
+    msgs = to_memory(producer_pipeline(stream_dir(readings, READINGS)), "wire_out")
     rows = msgs.collect()
     assert len(rows) == 1
     payload = json.loads(rows[0].payload)
@@ -72,11 +65,11 @@ def test_producer_consumer_wire_roundtrip(spark, stream_dir):
 
     # consumer side: parse back, event time survives the round trip
     parsed, corrupt = consumer_pipeline(stream_dir(msgs, MQTT_MESSAGE))
-    out = drain(parsed, "consumer_out").collect()
+    out = to_memory(parsed, "consumer_out").collect()
     assert len(out) == 1
     assert out[0].event_ts == ts("2024-12-23 10:00:00")
     assert out[0].temp_outdoor_celsius == 21.5
-    assert drain(corrupt, "corrupt_out").count() == 0
+    assert to_memory(corrupt, "corrupt_out").count() == 0
 
 
 def test_consumer_corrupt_routing_and_sentinel(spark, stream_dir):
@@ -88,8 +81,8 @@ def test_consumer_corrupt_routing_and_sentinel(spark, stream_dir):
         MQTT_MESSAGE,
     )
     parsed, corrupt = consumer_pipeline(stream_dir(msgs, MQTT_MESSAGE))
-    good = drain(parsed, "good_msgs").collect()
-    bad = drain(corrupt, "bad_msgs").collect()
+    good = to_memory(parsed, "good_msgs").collect()
+    bad = to_memory(corrupt, "bad_msgs").collect()
     assert len(good) == 1 and len(bad) == 1
     assert good[0].temp_outdoor_celsius == 888.8  # P13 sentinel default
     assert good[0].rh_outdoor == 60.0
@@ -101,7 +94,7 @@ def test_windowed_event_stats(spark, stream_dir):
     from sensor_data_pipeline_spark.sources.tables import load_table
 
     events = load_table(spark, "events", "/root/testdata/sf0.001")
-    out = drain(
+    out = to_memory(
         windowed_event_stats(stream_dir(events, TESTDATA_TABLES["events"])),
         "win_stats",
     )
@@ -119,13 +112,8 @@ def test_windowed_event_stats(spark, stream_dir):
 def test_publish_stream_foreach_lifecycle(spark, stream_dir, tmp_path):
     spool = str(tmp_path / "spool")
     msgs = spark.createDataFrame([("top", 2, "payload-1"), ("top", 2, "payload-2")], MQTT_MESSAGE)
-    q = publish_stream(
-        stream_dir(msgs, MQTT_MESSAGE),
-        FileSpoolPublisher(spool),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        trigger_once=True,
-    )
-    q.awaitTermination(60)
+    stream = stream_dir(msgs, MQTT_MESSAGE)
+    drain(publish_stream(stream, FileSpoolPublisher(spool), checkpoint_dir=str(tmp_path / "ckpt")))
     got = sorted(FileSpoolPublisher.read_all(spool))
     assert got == [("top", 2, "payload-1"), ("top", 2, "payload-2")]
 
@@ -147,11 +135,7 @@ def test_publish_checkpoint_restart_no_redelivery(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(MQTT_MESSAGE).parquet(f"{src}/f*")
-        q = publish_stream(
-            stream, FileSpoolPublisher(spool), checkpoint_dir=ckpt, trigger_once=True
-        )
-        q.awaitTermination(60)
-        q.stop()
+        drain(publish_stream(stream, FileSpoolPublisher(spool), checkpoint_dir=ckpt))
 
     first = spark.createDataFrame([("top", 2, "m1"), ("top", 2, "m2")], MQTT_MESSAGE)
     first.coalesce(1).write.parquet(f"{src}/f0")
@@ -218,7 +202,7 @@ def test_query_listener_sees_lifecycle(spark, stream_dir):
     spark.streams.addListener(listener)
     try:
         msgs = spark.createDataFrame([("t", 1, "x"), ("t", 1, "y")], MQTT_MESSAGE)
-        drain(stream_dir(msgs, MQTT_MESSAGE), "listener_probe")
+        to_memory(stream_dir(msgs, MQTT_MESSAGE), "listener_probe")
         deadline = time.time() + 20
         while time.time() < deadline and not listener.terminated:
             time.sleep(0.5)
@@ -253,7 +237,7 @@ def test_sessionize_stream_matches_batch_twin(spark, stream_dir):
         for i, v in enumerate([5.0, 4.0, -3.0, -2.0, 6.0])
     ]
     df = spark.createDataFrame(rows, schema)
-    out = drain(sessionize_stream(stream_dir(df, schema)), "sessions").orderBy("tick_ts").collect()
+    out = to_memory(sessionize_stream(stream_dir(df, schema)), "sessions").orderBy("tick_ts").collect()
     assert [r.session_id for r in out] == [1, 1, 2, 2, 3]
     # rate/eta arithmetic matches the batch twin's reference formula:
     # within session 2, second row: rate = (98-97)/(3-2+1) = 0.5
@@ -301,7 +285,7 @@ def test_sessionize_state_survives_micro_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{path}/f*")
     )
-    out = drain(sessionize_stream(stream), "sessions_mb").orderBy("tick_ts").collect()
+    out = to_memory(sessionize_stream(stream), "sessions_mb").orderBy("tick_ts").collect()
     assert [r.session_id for r in out] == [1, 1, 2, 2, 3]
     assert abs(out[3].use_per_sec - 0.5) < 1e-9
     assert abs(out[3].eta_sec - 97.0 / 0.5) < 1e-9
@@ -334,7 +318,7 @@ def test_sessionize_stream_orders_rows_across_arrow_chunks(spark, stream_dir, sm
     signals = [(-1.0) ** (i // 3) * (i + 1) for i in range(40)]  # sign flips every 3 ticks
     rows = [("u", ts(f"2024-01-01 00:{i // 60:02d}:{i % 60:02d}"), v, 100.0 - i) for i, v in enumerate(signals)]
     df = spark.createDataFrame(_shuffled(rows), schema).coalesce(1)
-    out = drain(sessionize_stream(stream_dir(df, df.schema)), "sessions_chunks").orderBy("tick_ts").collect()
+    out = to_memory(sessionize_stream(stream_dir(df, df.schema)), "sessions_chunks").orderBy("tick_ts").collect()
     assert [r.session_id for r in out] == [i // 3 + 1 for i in range(40)]
 
 
@@ -347,7 +331,7 @@ def test_ewma_stream_orders_rows_across_arrow_chunks(spark, stream_dir, small_ar
     schema = "k string, tick_ts timestamp, event_id bigint, x double"
     rows = [("u", ts(f"2024-01-01 00:00:{i // 2:02d}"), i, float((i * 37) % 11)) for i in range(40)]
     df = spark.createDataFrame(_shuffled(rows), schema).coalesce(1)
-    got = {r.event_id: r.ewma for r in drain(ewma_stream(stream_dir(df, df.schema)), "ewma_chunks").collect()}
+    got = {r.event_id: r.ewma for r in to_memory(ewma_stream(stream_dir(df, df.schema)), "ewma_chunks").collect()}
     want, s = {}, None
     for _, _, eid, x in rows:
         s = x / 2 if s is None else (s + x) / 2
@@ -377,9 +361,7 @@ def test_cdc_apply_stream_versioned_exactly_once(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/f*")
         )
-        q = cdc_apply_stream(stream, tgt, checkpoint_dir=ckpt)
-        q.awaitTermination(120)
-        q.stop()
+        drain(cdc_apply_stream(stream, tgt, checkpoint_dir=ckpt))
 
     spark.createDataFrame([(1, 100), (2, 50)], schema).coalesce(1).write.parquet(f"{src}/f0")
     time.sleep(1.1)
@@ -425,16 +407,9 @@ def test_keyed_state_survives_restart(spark, tmp_path):
     ]
 
     def run_once():
-        q = (
-            delta_stream_v1(spark.readStream.schema(schema).parquet(f"{src}/f*"))
-            .writeStream.format("parquet")
-            .option("path", str(sink))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+        stream = delta_stream_v1(spark.readStream.schema(schema).parquet(f"{src}/f*"))
+        sink_writer = stream.writeStream.format("parquet").option("path", str(sink))
+        drain(sink_writer.option("checkpointLocation", str(ckpt)))
 
     spark.createDataFrame(f0, schema).coalesce(1).write.parquet(f"{src}/f0")
     run_once()
@@ -479,15 +454,7 @@ def test_jsonl_spool_sink_two_phase_commit_and_restart(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(MQTT_MESSAGE).parquet(f"{src}/f*")
-        q = (
-            stream.writeStream.format("jsonl_spool")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+        drain(stream.writeStream.format("jsonl_spool").option("path", out).option("checkpointLocation", ckpt))
 
     spark.createDataFrame([("t", 2, "m1"), ("t", 2, "m2")], MQTT_MESSAGE).coalesce(1).write.parquet(
         f"{src}/f0"
@@ -524,16 +491,11 @@ def test_fanout_stream_two_displays(spark, stream_dir, tmp_path):
 
         return write
 
-    q = fanout_stream(
-        stream_dir(readings, READINGS),
-        {
-            "display0": (lambda df: df.select("temp_outdoor_celsius", "rh_outdoor"), writer(d0)),
-            "display1": (lambda df: df.select("temp_indoor_celsius"), writer(d1)),
-        },
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(60)
-    q.stop()
+    routes = {
+        "display0": (lambda df: df.select("temp_outdoor_celsius", "rh_outdoor"), writer(d0)),
+        "display1": (lambda df: df.select("temp_indoor_celsius"), writer(d1)),
+    }
+    drain(fanout_stream(stream_dir(readings, READINGS), routes, checkpoint_dir=str(tmp_path / "ckpt")))
 
     out0 = spark.read.parquet(f"{d0}/epoch*").collect()
     out1 = spark.read.parquet(f"{d1}/epoch*").collect()
@@ -542,7 +504,7 @@ def test_fanout_stream_two_displays(spark, stream_dir, tmp_path):
     assert set(out0[0].asDict()) == {"temp_outdoor_celsius", "rh_outdoor"}
 
 
-def test_streaming_native_session_window(spark, stream_dir, tmp_path):
+def test_streaming_native_session_window(spark, stream_dir):
     """Native gap-based session_window in STREAMING mode (q75's twin):
     sessions whose gap closed strictly behind the watermark are
     emitted in append mode. A far-future sentinel row advances the
@@ -573,19 +535,9 @@ def test_streaming_native_session_window(spark, stream_dir, tmp_path):
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id", F.col("sw.start").alias("start"), "n_events")
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("native_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
     got = {
         (r.user_id, r.start): r.n_events
-        for r in spark.sql("SELECT * FROM native_sessions").collect()
+        for r in to_memory(sessions, "native_sessions").collect()
     }
     assert got == {
         (1, ts("2024-01-01 00:00:00")): 3,
@@ -621,23 +573,15 @@ def test_complete_mode_running_aggregation(spark, tmp_path):
     totals = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("amount").alias("total")
     )
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("complete_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    q.stop()
+    drain(totals.writeStream.format("memory").queryName("complete_out").outputMode("complete"))
     got = {
         r.event_type: (r.n, r.total)
-        for r in spark.sql("SELECT * FROM complete_out").collect()
+        for r in spark.table("complete_out").collect()
     }
     assert got == {"click": (3, 6), "purchase": (2, 30)}
 
 
-def test_stream_stream_left_outer_interval_join(spark, stream_dir, tmp_path):
+def test_stream_stream_left_outer_interval_join(spark, stream_dir):
     """Stream-stream LEFT OUTER interval join: matched pairs emit
     immediately; an unmatched left row emits its null-padded form only
     after the watermark proves no match can still arrive. A far-future
@@ -683,19 +627,9 @@ def test_stream_stream_left_outer_interval_join(spark, stream_dir, tmp_path):
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
         "left_outer",
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssloj")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
     got = {
         (r.v_user, r.p_user): r.p_ts
-        for r in spark.sql("SELECT * FROM ssloj").collect()
+        for r in to_memory(joined, "ssloj").collect()
     }
     assert got[(1, 1)] == ts("2024-01-01 00:10:00")   # matched pair
     assert (2, None) in got and got[(2, None)] is None  # outer-null emitted
@@ -736,14 +670,7 @@ def test_foreachbatch_dimension_refresh(spark, tmp_path):
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{src}/f*")
     )
-    q = (
-        stream.writeStream.foreachBatch(enrich)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
+    drain(stream.writeStream.foreachBatch(enrich).option("checkpointLocation", str(tmp_path / "ckpt")))
     by_batch = {b: lbl for b, k, v, lbl in out}
     assert by_batch == {0: "old", 1: "new"}, out
 
@@ -761,7 +688,7 @@ def test_stream_time_axis_matches_batch(spark):
     batch = load_table(spark, "events", SF_SMOKE).agg(
         F.min("ts").alias("lo"), F.max("ts").alias("hi")
     ).collect()[0]
-    streamed = drain(_events_stream(spark, SF_SMOKE), "time_axis_mem")
+    streamed = to_memory(_events_stream(spark, SF_SMOKE), "time_axis_mem")
     got = streamed.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     assert got.lo == batch.lo and got.hi == batch.hi, (got, batch)
     # the fixture really is an event-time axis spanning days, not minutes
@@ -791,9 +718,7 @@ def test_mqtt_publisher_wiring_via_loopback(spark, stream_dir, tmp_path):
         client_factory=partial(LoopbackMqttClient, spool),
         ca_certs="/etc/ssl/ca.pem",  # goes to tls_set, recorded on connect
     )
-    q = publish_stream(stream_dir(msgs, MQTT_MESSAGE), pub, trigger_once=True)
-    q.awaitTermination(120)
-    q.stop()
+    drain(publish_stream(stream_dir(msgs, MQTT_MESSAGE), pub))
 
     ev = read_events(spool)
     pubs = {(e["topic"], e["qos"], e["payload"]) for e in ev if e["kind"] == "publish"}
@@ -866,9 +791,7 @@ def test_mqtt_publisher_against_real_broker(spark, stream_dir):
             MQTT_MESSAGE,
         )
         pub = MqttPublisher("127.0.0.1", port=1883, client_factory=make_client)
-        q = publish_stream(stream_dir(msgs, MQTT_MESSAGE), pub, trigger_once=True)
-        q.awaitTermination(120)
-        q.stop()
+        drain(publish_stream(stream_dir(msgs, MQTT_MESSAGE), pub))
         assert done.wait(timeout=15), f"subscriber saw only {got}"
         assert {(t, p) for t, p in got} == {
             (topic + "/SENSOR", '{"t":21.5}'),

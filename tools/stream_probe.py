@@ -4,12 +4,11 @@ VERDICT r11 item 6: the streaming family (~6 queries x 2-4s) is the
 largest untouched cost, and the multi-batch epochs are the tested
 semantics — so before touching anything, measure the per-batch
 breakdown (offset/commit-log persistence vs state-store work vs
-planning vs actual processing) with a StreamingQueryListener and
-decide what is config-addressable.
+planning vs actual processing) and decide what is config-addressable.
 
 Runs the named streaming queries once each, after bench.py's
-``warm_up``, with a listener attached, then prints per-batch
-``durationMs`` maps (Spark's own breakdown: triggerExecution,
+``warm_up``, subscribed to ``streaming.drain.observing``, then prints
+per-batch ``durationMs`` maps (Spark's own breakdown: triggerExecution,
 queryPlanning, getBatch, latestOffset, walCommit, commitOffsets,
 addBatch) and state-operator commit times.
 
@@ -35,64 +34,38 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    from pyspark.sql.streaming import StreamingQueryListener
-
     from sensor_data_pipeline_spark.plans import REGISTRY
+    from sensor_data_pipeline_spark.streaming.drain import observing
 
     spark = start_session("stream-probe")
     warm_up(spark, args.sf)
 
-    batches: list[dict] = []
-
-    class _Probe(StreamingQueryListener):
-        def onQueryStarted(self, event):  # noqa: N802
-            pass
-
-        def onQueryProgress(self, event):  # noqa: N802
-            p = event.progress
+    for name in args.queries:
+        spec = REGISTRY[name]
+        batches: list = []
+        t0 = time.perf_counter()
+        with observing(batches.extend):
+            n = materialize(spec.spark(spark, args.sf))
+        wall = round(time.perf_counter() - t0, 3)
+        total_trigger = sum(p.durationMs.get("triggerExecution", 0) for p in batches)
+        print(f"=== {name}: {n} rows, wall {wall}s, "
+              f"{len(batches)} batches, trigger-total {total_trigger}ms")
+        for p in batches:
             row = {
                 "name": p.name,
                 "batchId": p.batchId,
                 "numInputRows": p.numInputRows,
                 "durationMs": dict(p.durationMs),
-            }
-            try:
-                row["state"] = [
+                "state": [
                     {
                         "commitTimeMs": s.commitTimeMs,
                         "numStateRows": s.numRowsTotal,
                         "memoryUsedBytes": s.memoryUsedBytes,
                     }
                     for s in p.stateOperators
-                ]
-            except Exception:
-                pass
-            batches.append(row)
-
-        def onQueryIdle(self, event):  # noqa: N802
-            pass
-
-        def onQueryTerminated(self, event):  # noqa: N802
-            pass
-
-    probe = _Probe()
-    spark.streams.addListener(probe)
-
-    for name in args.queries:
-        spec = REGISTRY[name]
-        batches.clear()
-        t0 = time.perf_counter()
-        n = materialize(spec.spark(spark, args.sf))
-        wall = round(time.perf_counter() - t0, 3)
-        # listener events are delivered async; give the bus a moment
-        time.sleep(1.0)
-        total_trigger = sum(
-            b["durationMs"].get("triggerExecution", 0) for b in batches
-        )
-        print(f"=== {name}: {n} rows, wall {wall}s, "
-              f"{len(batches)} batches, trigger-total {total_trigger}ms")
-        for b in batches:
-            print(json.dumps(b, sort_keys=True))
+                ],
+            }
+            print(json.dumps(row, sort_keys=True))
     return 0
 
 
